@@ -9,8 +9,12 @@ entry points (SURVEY.md §3):
 Usage::
 
     python -m swat_mapreduce_spark <input_list> <output_dir>
-        [--labels PATH] [--model-cfg CFG] [--device cpu]
-        [--batch-size N] [--no-sort]
+        [--labels PATH] [--no-sort]
+
+``--labels`` stands in for the reference's ``<class_folder>``. The
+reference's model cfg, device and batch size have no counterpart: the
+deterministic scorer runs as JVM expressions, so the plan has no model
+to configure and no Arrow batches to size.
 
 Reads a manifest (one image path per line — blank lines skipped,
 ``#`` comments skipped, whitespace trimmed, exactly the mapper's
@@ -19,10 +23,10 @@ divergence: Spark's text source strips a FILE-LEADING UTF-8 BOM
 (imagelist1.txt ships one), so the first manifest line arrives clean
 here; a mid-file BOM (or one injected via DataFrame, as the synthetic
 manifest fixture does) still flows through untouched — that wart
-stays pinned by the flagship_classify oracle.
-scores every path (deterministic hash scorer by default; a real
-torch scorer plugs into operators/inference.scorer_fn), and writes
-the reference-layout TSV ``path\\tclass,prob`` part files, key-sorted.
+stays pinned by the flagship_classify oracle. Scores every path
+(the md5 stand-in scorer; the torch-gated real scorer lives in
+operators/inference.py) and writes the reference-layout TSV
+``path\\tclass,prob`` part files, key-sorted unless ``--no-sort``.
 
 Arg-validation behavior mirrors java/PredictDriverCluster.java:14-20:
 wrong arg count → usage on stderr, exit 2 (argparse convention).
@@ -48,22 +52,8 @@ def build_parser() -> argparse.ArgumentParser:
         "rules); default: built-in 30-class vocabulary",
     )
     p.add_argument(
-        "--model-cfg",
-        default="vitb32_openclip_laion400m",
-        help="model config tag (reference default, "
-        "predict_batch_threaded_local.py:125)",
-    )
-    p.add_argument(
-        "--device", default="cpu",
-        help="cpu|cuda (cuda only honored if available, :131)",
-    )
-    p.add_argument(
-        "--batch-size", type=int, default=32,
-        help="Arrow batch size (reference micro-batch=32, :127)",
-    )
-    p.add_argument(
         "--no-sort", action="store_true",
-        help="skip the global key sort (sortWithinPartitions only) — "
+        help="write the predictions unsorted (no global key sort) — "
         "the 100 TB default",
     )
     return p
@@ -72,32 +62,25 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
-    from pyspark.sql import functions as F
+    from pyspark.sql import SparkSession
 
     from swat_mapreduce_spark.operators import classify
     from swat_mapreduce_spark.session import get_spark
+    from swat_mapreduce_spark.sources.readers import read_manifest
     from swat_mapreduce_spark.sources.sinks import write_predictions_tsv
 
-    spark = get_spark("swat-cli")
-    if args.batch_size:
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(args.batch_size),
-        )
-
-    manifest = spark.read.text(args.input_list).withColumnRenamed(
-        "value", "line"
+    # a caller's session is used as it stands; engine defaults apply
+    # only to a session this run creates
+    spark = SparkSession.getActiveSession() or get_spark("swat-cli")
+    labeled = classify.predict(
+        read_manifest(spark, args.input_list), spark, labels_path=args.labels
     )
-    cleaned = classify.clean_manifest(manifest)
-    preds = classify.predict_top1(classify.score(cleaned))
-    labeled = classify.attach_labels(preds, spark, labels_path=args.labels)
     write_predictions_tsv(
         labeled.select("image_path", "class", "prob"),
         args.output_dir,
         sort=not args.no_sort,
     )
-    n = spark.read.text(args.output_dir).count()
-    print(f"wrote {n} prediction rows to {args.output_dir}", file=sys.stderr)
+    print(f"wrote predictions to {args.output_dir}", file=sys.stderr)
     return 0
 
 

@@ -179,20 +179,32 @@ def attach_labels(
     )
 
 
-def classify_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship end-to-end query (entry() / bench headline).
+def predict(
+    lines: DataFrame, spark: SparkSession, labels_path: str | None = None
+) -> DataFrame:
+    """Manifest ``line`` rows → ``(image_path, pred_idx, prob, class)``:
+    clean → score → softmax/top-1 → label join. Works on batch and
+    streaming frames alike (every stage is stateless per row)."""
+    preds = predict_top1(score(clean_manifest(lines)))
+    return attach_labels(preds, spark, labels_path=labels_path)
 
-    Output: ``(image_path, class, prob double(4dp), prob_str '%.4f')``
-    sorted by image_path, duplicates preserved."""
-    manifest = synth_manifest(spark, sf_dir)
-    preds = predict_top1(score(clean_manifest(manifest)))
-    labeled = attach_labels(preds, spark)
-    return labeled.select(
+
+def classify_unsorted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flagship output rows, in no particular order:
+    ``(image_path, class, prob double(4dp), prob_str '%.4f')``,
+    duplicates preserved."""
+    return predict(synth_manifest(spark, sf_dir), spark).select(
         "image_path",
         "class",
         R.r("prob", 4).alias("prob"),
         format_prob("prob").alias("prob_str"),
-    ).orderBy("image_path")
+    )
+
+
+def classify_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flagship end-to-end query (entry() / bench headline):
+    ``classify_unsorted`` sorted by image_path."""
+    return classify_unsorted(spark, sf_dir).orderBy("image_path")
 
 
 # ---------------------------------------------------------------------------

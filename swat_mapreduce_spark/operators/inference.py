@@ -31,6 +31,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from swat_mapreduce_spark.labels import CLASS_NAMES, NUM_CLASSES
 
@@ -193,27 +194,23 @@ def _get_scorer(scorer_factory):
     return _SCORER_STATE[key]
 
 
-def predict_batch(
-    paths_df: DataFrame,
-    scorer_factory: Callable = hash_scorer,
-    path_col: str = "image_path",
+def _predict(
+    keyed: DataFrame, scorer_factory: Callable, schema: str
 ) -> DataFrame:
-    """manifest paths → (image_path, class, prob) via mapInPandas.
-
-    Semantics identical to the reference CLI
-    (python/predict_batch_threaded_local.py:137-160): softmax → top-1 →
-    label lookup with out-of-range guard → decode-failure fallback row
-    ``(path, CLASS_NAMES[0], 0.0)``.
-    """
+    """The one Arrow-batched top-1 step. ``keyed`` carries the row id
+    first (passed through under its own name) and the scorer key last
+    (the same column when there is only one). Semantics of the
+    reference CLI (python/predict_batch_threaded_local.py:137-160):
+    softmax → top-1 → decode-failure fallback (class 0, prob 0.0) →
+    label lookup with out-of-range guard."""
+    id_name = keyed.columns[0]
 
     def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         score = _get_scorer(scorer_factory)
         classes = np.array(CLASS_NAMES)
         for pdf in batches:
-            paths = pdf[path_col]
-            logits, ok = score(paths)
-            # softmax (stable form irrelevant at these magnitudes, but
-            # match the JVM expression exactly: exp / sum(exp))
+            logits, ok = score(pdf.iloc[:, -1])
+            # match the JVM expression exactly: exp / sum(exp)
             e = np.exp(logits)
             probs = e / e.sum(axis=1, keepdims=True)
             idx = np.argmax(logits, axis=1)  # first-max, same as torch.max
@@ -223,13 +220,27 @@ def predict_batch(
             guarded = np.where(idx < len(classes), idx, 0)
             yield pd.DataFrame(
                 {
-                    "image_path": paths.values,
+                    id_name: pdf[id_name].values,
                     "class": classes[guarded],
                     "prob": prob,
                 }
             )
 
-    return paths_df.select(path_col).mapInPandas(infer, schema=PREDICTION_SCHEMA)
+    return keyed.mapInPandas(infer, schema=schema)
+
+
+def predict_batch(
+    paths_df: DataFrame,
+    scorer_factory: Callable = hash_scorer,
+    path_col: str = "image_path",
+) -> DataFrame:
+    """manifest paths → (image_path, class, prob) via mapInPandas; the
+    scorer sees each path."""
+    return _predict(
+        paths_df.select(F.col(path_col).alias("image_path")),
+        scorer_factory,
+        PREDICTION_SCHEMA,
+    )
 
 
 BINARY_PREDICTION_SCHEMA = "doc_id long, class string, prob double"
@@ -243,35 +254,14 @@ def predict_batch_from_payload(
     over fetched binary objects (java/PredictBatchMapperCluster.java:
     51-67 fetches per-record files and scores the decoded pixels).
 
-    The scorer key is md5(content) hex, fed through the same block-md5
-    logit construction as hash_scorer, so softmax/argmax/fallback
-    semantics are byte-identical to the path-keyed pipeline and the
-    DuckDB oracle can reproduce them via md5(text).
+    The scorer key is md5(content) hex, computed by Spark's built-in
+    ``md5`` in the JVM, so Python workers receive 32-character keys
+    rather than the payloads. The key feeds the same block-md5 logit
+    construction and top-1 step as ``predict_batch``, so softmax/
+    argmax/fallback semantics are byte-identical to the path-keyed
+    pipeline and the DuckDB oracle can reproduce them via md5(text).
     """
-
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        classes = np.array(CLASS_NAMES)
-        for pdf in batches:
-            keys = pd.Series(
-                [hashlib.md5(bytes(c)).hexdigest() for c in pdf[content_col]]
-            )
-            logits = hash_logits_np(keys)
-            ok = hash_decode_ok_np(keys)
-            e = np.exp(logits)
-            probs = e / e.sum(axis=1, keepdims=True)
-            idx = np.argmax(logits, axis=1)
-            prob = probs[np.arange(len(pdf)), idx]
-            idx = np.where(ok, idx, 0)
-            prob = np.where(ok, prob, 0.0)
-            guarded = np.where(idx < len(classes), idx, 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].values,
-                    "class": classes[guarded],
-                    "prob": prob,
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        infer, schema=BINARY_PREDICTION_SCHEMA
+    keyed = df.select(
+        F.col(id_col).alias("doc_id"), F.md5(content_col).alias("key")
     )
+    return _predict(keyed, hash_scorer, BINARY_PREDICTION_SCHEMA)

@@ -352,19 +352,9 @@ def binary_inference_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is row-order-insensitive, so the SAME oracle pins this variant.
 @register("flagship_classify_scale", oracle=classify.classify_oracle_sql(""))
 def flagship_classify_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    manifest = classify.synth_manifest(spark, sf_dir)
-    preds = classify.predict_top1(
-        classify.score(classify.clean_manifest(manifest))
+    return classify.classify_unsorted(spark, sf_dir).sortWithinPartitions(
+        "image_path"
     )
-    labeled = classify.attach_labels(preds, spark)
-    from swat_mapreduce_spark.functions.text import format_prob
-
-    return labeled.select(
-        "image_path",
-        "class",
-        R.r("prob", 4).alias("prob"),
-        format_prob("prob").alias("prob_str"),
-    ).sortWithinPartitions("image_path")
 
 
 # --- CSV PERMISSIVE mode: corrupt-record capture ---------------------------

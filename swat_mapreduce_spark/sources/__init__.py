@@ -1,7 +1,5 @@
 from swat_mapreduce_spark.sources.readers import (  # noqa: F401
     TABLES,
-    load_tables,
     read_manifest,
     read_table,
-    register_views,
 )

@@ -92,18 +92,6 @@ def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views for ``spark.sql`` use."""
-    for n in TABLES:
-        read_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
     """Manifest text scan → ``DataFrame[line: string]``.
 

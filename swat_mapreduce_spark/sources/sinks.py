@@ -29,11 +29,6 @@ def write_predictions_tsv(preds: DataFrame, path: str, sort: bool = True) -> Non
     ).write.mode("overwrite").text(path)
 
 
-def write_tsv(df: DataFrame, path: str) -> None:
-    """Generic TSV sink (no header, \\t separator)."""
-    df.write.mode("overwrite").option("sep", "\t").csv(path)
-
-
 def write_parquet(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:

@@ -429,9 +429,7 @@ def streaming_classify(
     from swat_mapreduce_spark.operators import classify
 
     stream = spark.readStream.schema(schema).format("text").load(manifest_dir)
-    cleaned = classify.clean_manifest(stream.withColumnRenamed("value", "line"))
-    preds = classify.predict_top1(classify.score(cleaned))
-    return classify.attach_labels(preds, spark)
+    return classify.predict(stream.withColumnRenamed("value", "line"), spark)
 
 
 def interval_join_clicks_purchases(

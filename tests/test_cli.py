@@ -67,6 +67,23 @@ def test_cli_custom_labels(spark, tmp_path):
         assert cls in ("cat", "dog")
 
 
+def test_cli_leaves_session_confs_unchanged(spark, tmp_path):
+    """A CLI run inside a live session must leave every runtime conf as
+    it found it — the Arrow batch size above all, which later
+    mapInPandas stages in the same session read."""
+    manifest = tmp_path / "m.txt"
+    manifest.write_text("/x/one.jpg\n/x/two.jpg\n")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = dict(spark.conf.getAll)
+    batch_before = spark.conf.get(key)
+
+    from swat_mapreduce_spark.cli import main
+
+    assert main([str(manifest), str(tmp_path / "out")]) == 0
+    assert spark.conf.get(key) == batch_before
+    assert dict(spark.conf.getAll) == before
+
+
 def test_cli_bad_args_exit_code():
     """Arg-count validation parity (java/PredictDriverCluster.java:17-20):
     missing args → non-zero exit."""

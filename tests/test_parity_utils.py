@@ -677,9 +677,11 @@ _CORPUS_BCAST_ALLOWLIST = {
     # hit set <= the fixed _PH_Q query sample (vid == cid
     # self-matches); the cut hides inside the banded candidate join
     "phash_neardup_recall": 1,
-    # co-occurrence/count tables keyed on the TOP-K topic words; the
-    # K-cut sits behind a persisted relation the tree cannot traverse
-    "umass_topic_coherence": 3,
+    # the co-occurrence (d_ij) and document-frequency (d) tables, both
+    # keyed on the TOP-K topic words; the K-cut sits behind a persisted
+    # relation the tree cannot traverse. The query's third hint (the
+    # topic-word semi-join) is proven bounded and is not counted.
+    "umass_topic_coherence": 2,
 }
 
 
