@@ -384,14 +384,9 @@ REPEATS = 2
 MAX_REPEATS = 4
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from swat_mapreduce_spark.queries import load_all
-    from swat_mapreduce_spark.session import get_spark
-
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    reg = load_all()
+def warm_up(spark, reg, sf_dir: str) -> None:
+    """Untimed warm-up shared by bench.py and tools/isolate.py."""
+    from pyspark.sql import functions as F
 
     # Warm up the execution machinery on unrelated trivial jobs so
     # per-query timings reflect steady state, not one-time init:
@@ -399,8 +394,6 @@ def main() -> None:
     # the Arrow + Python-worker pool (pandas UDF path).
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     tiny = spark.createDataFrame([(i, f"w{i}") for i in range(8)], "k int, v string")
-    from pyspark.sql import functions as F
-
     spark.range(1000).join(
         F.broadcast(tiny), F.col("id") % 8 == F.col("k")
     ).count()
@@ -418,6 +411,19 @@ def main() -> None:
     # of the first headline query retires that cost before timing.
     reg[HEADLINE[0]].spark_fn(spark, sf_dir).count()
     spark.catalog.clearCache()
+
+
+def main() -> None:
+    from swat_mapreduce_spark.queries import load_all
+    from swat_mapreduce_spark.sources.readers import DEFAULT_SF_DIR
+    from swat_mapreduce_spark.session import get_spark
+
+    sf_dir = DEFAULT_SF_DIR
+    spark = get_spark("bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    reg = load_all()
+
+    warm_up(spark, reg, sf_dir)
 
     timings: dict[str, float] = {}
     for name in HEADLINE:
@@ -487,16 +493,9 @@ def main() -> None:
     # batch scan, so a batch-SQL ratio would compare different work.
     duck_timings: dict[str, float] = {}
     try:
-        import duckdb
+        from tools.selfcheck import duck_con, duck_result
 
-        from swat_mapreduce_spark.sources.readers import TABLES
-
-        con = duckdb.connect()
-        for t in TABLES:
-            con.sql(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/{t}.parquet')"
-            )
+        con = duck_con(sf_dir)
         for name in HEADLINE:
             q = reg[name]
             if q.oracle is None or name.startswith("stream_"):
@@ -505,7 +504,7 @@ def main() -> None:
             try:
                 for _ in range(REPEATS):
                     t0 = time.time()
-                    con.execute(q.oracle).fetchall()
+                    duck_result(con, q.oracle)
                     dt = time.time() - t0
                     best = dt if best is None else min(best, dt)
             except Exception as e:  # noqa: BLE001

@@ -69,15 +69,14 @@ def main(argv: list[str] | None = None) -> int:
         print(f"unknown query: {args.query!r} (see --list)", file=sys.stderr)
         return 2
 
+    from swat_mapreduce_spark.plans.explain import formatted_plan
     from swat_mapreduce_spark.session import ensure_engine_conf, get_spark
 
     spark = get_spark("swat-query-cli")
     ensure_engine_conf(spark)
     df = reg[args.query].spark_fn(spark, args.sf_dir)
     if args.explain:
-        print(df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            df._jdf.queryExecution(), "formatted"
-        ))
+        print(formatted_plan(df))
     elif args.format == "show":
         df.show(args.limit, truncate=False)
         print(f"({df.count()} rows total)", file=sys.stderr)

@@ -4,15 +4,8 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 
-sys.path.insert(
-    0,
-    os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-    ),
-)
-from benchdiff import classify  # noqa: E402
+from tools.benchdiff import classify
 
 PINS = {
     "ratio_threshold": 1.3,
@@ -175,7 +168,7 @@ def test_drift_default_preserves_same_source_behavior():
 
 
 def test_source_sha_stamp_is_stable_and_content_sensitive(tmp_path):
-    from benchdiff import source_sha
+    from tools.benchdiff import source_sha
 
     pkg = tmp_path / "swat_mapreduce_spark"
     pkg.mkdir()

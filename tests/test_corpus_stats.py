@@ -16,21 +16,10 @@ test_wedge_cap discipline), then pins the planted semantics.
 
 from __future__ import annotations
 
-import os
-import sys
-
-import duckdb
 import pytest
 
-sys.path.insert(
-    0,
-    os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-    ),
-)
-from selfcheck import table_hash  # noqa: E402
-
 from swat_mapreduce_spark.queries import load_all
+from tools.selfcheck import assert_matches_oracle
 
 REG = load_all()
 
@@ -71,30 +60,10 @@ def planted(spark, tmp_path_factory):
     return str(tmp)
 
 
-def _both(spark, planted, name):
-    q = REG[name]
-    sdf = q.spark_fn(spark, planted)
-    scols = sorted(sdf.columns)
-    srows = [tuple(r[c] for c in scols) for r in sdf.collect()]
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{planted}/documents.parquet/*.parquet')"
-    )
-    dcols = sorted(d[0] for d in con.execute(q.oracle).description)
-    drows = con.execute(
-        f"SELECT {', '.join(dcols)} FROM ({q.oracle}) t"
-    ).fetchall()
-    sh, sn = table_hash(scols, srows)
-    dh, dn = table_hash(dcols, drows)
-    assert (sn, scols, sh) == (dn, dcols, dh), (
-        f"{name}: spark {sn} rows hash {sh} != duckdb {dn} rows hash {dh}"
-    )
-    return sdf.collect()
-
-
 def test_longest_run_separates_verbatim_from_scattered(spark, planted):
-    rows = _both(spark, planted, "contamination_longest_run")
+    rows = assert_matches_oracle(
+        spark, REG["contamination_longest_run"], planted
+    )
     by_doc = {r["doc_id"]: r for r in rows}
     # 12 lifted words -> 10 consecutive 3-gram shingles; the flanking
     # noise trigrams don't match
@@ -108,7 +77,9 @@ def test_longest_run_separates_verbatim_from_scattered(spark, planted):
 
 
 def test_dup_cluster_histogram_counts_the_pair(spark, planted):
-    rows = _both(spark, planted, "dup_cluster_size_histogram")
+    rows = assert_matches_oracle(
+        spark, REG["dup_cluster_size_histogram"], planted
+    )
     by_size = {r["cluster_size"]: r for r in rows}
     assert by_size[2]["n_clusters"] == 1
     assert by_size[2]["n_docs"] == 2
@@ -117,19 +88,21 @@ def test_dup_cluster_histogram_counts_the_pair(spark, planted):
 
 
 def test_dedup_yield_marks_only_the_second_copy(spark, planted):
-    rows = _both(spark, planted, "dedup_yield_by_decile")
+    rows = assert_matches_oracle(spark, REG["dedup_yield_by_decile"], planted)
     total_dups = sum(r["n_dups"] for r in rows)
     assert total_dups == 1  # doc 4 duplicates doc 3; doc 3 is first
     assert sum(r["n_docs"] for r in rows) == 10
 
 
 def test_fertility_exact_integers(spark, planted):
-    rows = _both(spark, planted, "tokenizer_fertility_by_lang")
+    rows = assert_matches_oracle(
+        spark, REG["tokenizer_fertility_by_lang"], planted
+    )
     de = next(r for r in rows if r["lang"] == "de")
     # 5 docs x 8 words
     assert de["n_docs"] == 5 and de["n_words"] == 40
 
 
 def test_burstiness_and_wilson_hash_match(spark, planted):
-    _both(spark, planted, "token_burstiness_topk")
-    _both(spark, planted, "wilson_ci_keep_rate")
+    assert_matches_oracle(spark, REG["token_burstiness_topk"], planted)
+    assert_matches_oracle(spark, REG["wilson_ci_keep_rate"], planted)

@@ -29,25 +29,11 @@ def test_inference_paths_match_duckdb_oracle(spark, sf_dir, name):
     """Both mapInPandas paths against their DuckDB oracles, value hash
     and all: binary_inference_e2e keys on md5(content) from Spark's
     built-in md5, the oracle on DuckDB's md5(text)."""
-    import duckdb
-
     from swat_mapreduce_spark.queries import load_all
-    from tools.selfcheck import table_hash
+    from tools.selfcheck import assert_matches_oracle
 
-    q = load_all()[name]
-    sdf = q.spark_fn(spark, sf_dir)
-    scols = sdf.columns
-    sh = table_hash(scols, [tuple(r) for r in sdf.collect()])
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    res = con.sql(q.oracle)
-    dcols = res.columns
-    dh = table_hash(dcols, [tuple(m[c] for c in dcols) for m in res.arrow().to_pylist()])
-    assert (sorted(scols), sh) == (sorted(dcols), dh)
-    assert sh[1] > 0
+    rows = assert_matches_oracle(spark, load_all()[name], sf_dir)
+    assert rows
 
 
 def test_binary_payload_metadata(spark, sf_dir):

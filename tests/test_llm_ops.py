@@ -365,46 +365,18 @@ def test_bpe_oracle_parity_under_k_adoptable_merges(spark, tmp_path):
     DuckDB oracle must carry s{k-1} through an empty merge round
     (LEFT JOIN ON TRUE identity) instead of collapsing the vocab to
     0 rows via a CROSS JOIN with an empty b{k} (ADVICE r5)."""
-    import glob
-    import os
-    import shutil
-
-    import duckdb
-
     from swat_mapreduce_spark.queries import load_all
+    from tools.selfcheck import assert_matches_oracle, duck_con
 
     # "ab" alone: round 1 adopts ('a','b'); rounds 2..K find no pair.
     rows = [(i, "ab ab ab", "en", "unit", 8) for i in range(3)]
     df = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    d = str(tmp_path / "docs")
-    df.repartition(1).write.parquet(d)
-    f = glob.glob(os.path.join(d, "part-*.parquet"))[0]
-    shutil.move(f, os.path.join(str(tmp_path), "documents.parquet"))
+    df.repartition(1).write.parquet(str(tmp_path / "documents.parquet"))
 
-    sys_tools = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-    )
-    import sys
-
-    sys.path.insert(0, sys_tools)
-    from selfcheck import table_hash
-
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{tmp_path}/documents.parquet')"
-    )
+    con = duck_con(str(tmp_path))
     reg = load_all()
     for name in ("bpe_train_kmerges", "bpe_encode_corpus"):
-        q = reg[name]
-        sdf = q.spark_fn(spark, str(tmp_path))
-        sh, sn = table_hash(sdf.columns, [tuple(r) for r in sdf.collect()])
-        res = con.sql(q.oracle)
-        drows = [tuple(m[c] for c in res.columns) for m in res.arrow().to_pylist()]
-        dh, dn = table_hash(list(res.columns), drows)
-        assert (sn, sh) == (dn, dh), (
-            f"{name}: spark({sn},{sh}) != duck({dn},{dh})"
-        )
-        assert sn > 0, f"{name}: vacuous 0-row parity (gotcha 5)"
+        rows = assert_matches_oracle(spark, reg[name], str(tmp_path), con)
+        assert rows, f"{name}: vacuous 0-row parity (gotcha 5)"

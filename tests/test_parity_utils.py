@@ -618,10 +618,7 @@ def test_census_cross_sf_plan_invariance_sample(spark):
     claim live in CI for a sample of r6-added join-bearing queries at
     two SFs, 10x apart — a broadcast that silently flips to SMJ or an
     extra Exchange as data grows fails here before it ships."""
-    import sys
-
-    sys.path.insert(0, "tools")
-    from planaudit import audit_one
+    from tools.planaudit import audit_one
 
     from swat_mapreduce_spark.queries import load_all
 

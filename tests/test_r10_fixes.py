@@ -12,16 +12,9 @@
 
 from __future__ import annotations
 
-import os
-import sys
-
-import duckdb
 import pytest
 
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
-)
-from tools.selfcheck import table_hash  # noqa: E402
+from tools.selfcheck import assert_matches_oracle, duck_con
 
 # the queries VERDICT r9 flagged as carrying the unguarded bound
 EDGE_QUERIES = [
@@ -62,24 +55,10 @@ def test_gotcha10_edge_docs_match_oracle(spark, edge_dir):
     from swat_mapreduce_spark.queries import load_all
 
     reg = load_all()
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW documents AS SELECT * FROM read_parquet("
-        f"'{edge_dir}/documents.parquet/*.parquet')"
-    )
+    con = duck_con(edge_dir)
     for name in EDGE_QUERIES:
-        q = reg[name]
-        sdf = q.spark_fn(spark, edge_dir)
-        sh, sn = table_hash(sdf.columns, [tuple(r) for r in sdf.collect()])
-        spark.catalog.clearCache()
-        res = con.sql(q.oracle)
-        dcols = list(res.columns)
-        dmaps = res.arrow().to_pylist()
-        dh, dn = table_hash(dcols, [tuple(m[c] for c in dcols) for m in dmaps])
-        assert (sn, sh) == (dn, dh), (
-            f"{name}: spark({sn},{sh}) != duck({dn},{dh}) on the "
-            "degenerate-doc fixture — sequence guard regressed"
-        )
+        # a mismatch here means the sequence guard regressed
+        assert_matches_oracle(spark, reg[name], edge_dir, con)
 
 
 def test_ljung_box_constant_series_nulls(spark):

@@ -8,24 +8,14 @@ from __future__ import annotations
 import math
 from decimal import ROUND_HALF_UP, Decimal
 
-import duckdb
 from pyspark.sql import functions as F
 
 from swat_mapreduce_spark.queries import load_all
+from tools.selfcheck import duck_con
 
 
 def _q(name):
     return load_all()[name]
-
-
-def _con(sf_dir, tables):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
 
 
 def test_km_matches_pure_python_estimator(spark, sf_dir):
@@ -34,7 +24,7 @@ def test_km_matches_pure_python_estimator(spark, sf_dir):
     mirroring the engine's per-step rounding)."""
     rows = _q("survival_km_weekly").spark_fn(spark, sf_dir).collect()
     assert rows
-    con = _con(sf_dir, ["orders"])
+    con = duck_con(sf_dir)
     durs = con.execute(
         """
         WITH o AS (
@@ -87,7 +77,7 @@ def test_km_matches_pure_python_estimator(spark, sf_dir):
 def test_holt_matches_pure_python_recursion(spark, sf_dir):
     rows = _q("holt_linear_forecast").spark_fn(spark, sf_dir).collect()
     assert len(rows) == 3
-    con = _con(sf_dir, ["orders"])
+    con = duck_con(sf_dir)
     ys = [
         Decimal(str(v)).quantize(Decimal("1E-6"))
         for (v,) in con.execute(
@@ -126,7 +116,7 @@ def test_seasonal_decompose_shape(spark, sf_dir):
     # partial MA windows asymmetrically)
     tot = sum(r["seasonal_index"] * r["n_days"] for r in rows)
     n = sum(r["n_days"] for r in rows)
-    con = _con(sf_dir, ["orders"])
+    con = duck_con(sf_dir)
     (mean_rev,) = con.execute(
         "SELECT avg(rev) FROM (SELECT sum(o_totalprice) AS rev "
         "FROM orders GROUP BY o_orderdate::DATE)"
@@ -154,7 +144,7 @@ def test_auc_matches_numpy(spark, sf_dir):
     import numpy as np
 
     row = _q("classifier_auc_ranksum").spark_fn(spark, sf_dir).collect()[0]
-    con = _con(sf_dir, ["documents"])
+    con = duck_con(sf_dir)
     sc = con.execute(
         r"""
         WITH t AS (

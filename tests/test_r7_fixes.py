@@ -26,6 +26,8 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from tools.selfcheck import duck_con, duck_result
+
 
 def _q(name):
     from swat_mapreduce_spark.queries import load_all
@@ -43,15 +45,9 @@ def test_pca_bit_identical_to_oracle(spark, sf_dir):
         r["dim"]: (r["loading"], r["explained_var"])
         for r in q.spark_fn(spark, sf_dir).collect()
     }
-    con = duckdb.connect()
-    for t in ("embeddings",):
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_con(sf_dir)
     drows = {
-        int(d): (lo, ev)
-        for d, lo, ev in con.sql(q.oracle).fetchall()
+        int(d): (lo, ev) for d, lo, ev in duck_result(con, q.oracle)[1]
     }
     assert set(srows) == set(drows) and len(srows) == 64
     for dim in srows:

@@ -6,8 +6,9 @@ from __future__ import annotations
 
 import math
 
-import duckdb
 from pyspark.sql import functions as F
+
+from tools.selfcheck import duck_con
 
 
 def _q(name):
@@ -16,19 +17,9 @@ def _q(name):
     return load_all()[name]
 
 
-def _duck(sf_dir):
-    con = duckdb.connect()
-    for t in ("part", "orders", "lineitem", "events", "documents"):
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
-
-
 def test_recursive_cte_covers_every_part(spark, sf_dir):
     rows = _q("recursive_cte_part_rollup").spark_fn(spark, sf_dir).collect()
-    con = _duck(sf_dir)
+    con = duck_con(sf_dir)
     (n_parts,) = con.sql("SELECT count(*) FROM part").fetchall()[0]
     assert sum(r["n_parts"] for r in rows) == n_parts
     # roots are the sub-10 keys; every part reaches one in log10 steps
@@ -48,7 +39,7 @@ def test_sql_udf_inlines_no_python_stage(spark, sf_dir):
 
 def test_tvf_instalments_conserve_totals(spark, sf_dir):
     rows = _q("sql_tvf_instalments").spark_fn(spark, sf_dir).collect()
-    con = _duck(sf_dir)
+    con = duck_con(sf_dir)
     truth = dict(
         con.sql(
             "SELECT o_orderpriority, round(sum(CAST(o_totalprice AS "
@@ -87,7 +78,7 @@ def test_scripting_threshold_is_minimal_power_of_two(spark, sf_dir):
 
 def test_mann_kendall_matches_bruteforce(spark, sf_dir):
     row = _q("mann_kendall_daily_value").spark_fn(spark, sf_dir).collect()[0]
-    con = _duck(sf_dir)
+    con = duck_con(sf_dir)
     daily = con.sql(
         "SELECT ts::DATE d, sum(CAST(value AS DECIMAL(30,8))) x "
         "FROM events GROUP BY 1 ORDER BY 1"
@@ -109,7 +100,7 @@ def test_mann_kendall_matches_bruteforce(spark, sf_dir):
 
 def test_theil_sen_matches_bruteforce(spark, sf_dir):
     row = _q("theil_sen_daily_trend").spark_fn(spark, sf_dir).collect()[0]
-    con = _duck(sf_dir)
+    con = duck_con(sf_dir)
     daily = con.sql(
         "SELECT ts::DATE d, sum(CAST(value AS DECIMAL(30,8)))::DOUBLE x "
         "FROM events GROUP BY 1 ORDER BY 1"
@@ -185,7 +176,7 @@ def test_mmr_greedy_properties(spark, sf_dir):
 
 def test_runs_test_matches_bruteforce(spark, sf_dir):
     row = _q("runs_test_daily_updown").spark_fn(spark, sf_dir).collect()[0]
-    con = _duck(sf_dir)
+    con = duck_con(sf_dir)
     daily = con.sql(
         "SELECT ts::DATE d, sum(CAST(value AS DECIMAL(30,8))) x "
         "FROM events GROUP BY 1 ORDER BY 1"
@@ -264,8 +255,6 @@ def test_conformal_coverage_guarantee(spark, sf_dir):
 
 
 def test_kcenter_greedy_maxmin_property(spark, sf_dir):
-    import duckdb as _duckdb
-
     rows = sorted(
         _q("kcenter_greedy_coreset").spark_fn(spark, sf_dir).collect(),
         key=lambda r: r["step"],
@@ -279,12 +268,11 @@ def test_kcenter_greedy_maxmin_property(spark, sf_dir):
     # independent numpy check of step 2: farthest point from the seed
     import numpy as np
 
-    con = _duckdb.connect()
+    con = duck_con(sf_dir)
     X = {
         int(v): np.array(e, dtype=np.float64)
         for v, e in con.execute(
-            f"SELECT vec_id, embedding FROM "
-            f"read_parquet('{sf_dir}/embeddings.parquet')"
+            "SELECT vec_id, embedding FROM embeddings"
         ).fetchall()
     }
     seed = X[0]
@@ -307,7 +295,7 @@ def test_bootstrap_ci_brackets_rate(spark, sf_dir):
 
 def test_gini_matches_bruteforce(spark, sf_dir):
     row = _q("gini_source_concentration").spark_fn(spark, sf_dir).collect()[0]
-    con = _duck(sf_dir)
+    con = duck_con(sf_dir)
     xs = sorted(
         con.sql(
             "SELECT source, sum(n_chars) FROM documents GROUP BY 1"
@@ -361,7 +349,7 @@ def test_sliding_p50_matches_bruteforce(spark, sf_dir):
         r["day"]: r
         for r in _q("sliding_p50_value_7d").spark_fn(spark, sf_dir).collect()
     }
-    con = _duck(sf_dir)
+    con = duck_con(sf_dir)
     ev = con.sql(
         "SELECT ts::DATE d, CAST(round(value*100) AS BIGINT) c FROM events"
     ).fetchall()
@@ -399,7 +387,7 @@ def test_permutation_test_definitions(spark, sf_dir):
 
 
 def _paired_truth(sf_dir):
-    con = _duck(sf_dir)
+    con = duck_con(sf_dir)
     rows = con.sql(
         r"""
         WITH toks AS (
@@ -474,7 +462,7 @@ def test_jackknife_matches_bruteforce(spark, sf_dir):
     row = (
         _q("jackknife_keep_rate_stderr").spark_fn(spark, sf_dir).collect()[0]
     )
-    con = _duck(sf_dir)
+    con = duck_con(sf_dir)
     per = con.sql(
         r"""
         WITH toks AS (
@@ -516,7 +504,7 @@ def test_acf_lag_properties(spark, sf_dir):
     # independent numpy recompute (unquantized, tolerance covers units)
     import numpy as np
 
-    con = _duck(sf_dir)
+    con = duck_con(sf_dir)
     xs = np.array(
         [
             float(x)
@@ -536,7 +524,7 @@ def test_acf_lag_properties(spark, sf_dir):
 
 def test_trimmed_mean_matches_bruteforce(spark, sf_dir):
     rows = _q("trimmed_mean_priority").spark_fn(spark, sf_dir).collect()
-    con = _duck(sf_dir)
+    con = duck_con(sf_dir)
     for r in rows:
         vals = sorted(
             int(v)

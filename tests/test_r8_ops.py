@@ -4,7 +4,7 @@ independent invariants (not just the DuckDB oracle hash).
 
 from __future__ import annotations
 
-import duckdb
+from tools.selfcheck import duck_con
 
 
 def _q(name):
@@ -13,19 +13,9 @@ def _q(name):
     return load_all()[name]
 
 
-def _duck(sf_dir):
-    con = duckdb.connect()
-    for t in ("orders", "documents", "embeddings", "events"):
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
-
-
 def test_zone_map_bounds_and_row_conservation(spark, sf_dir):
     rows = _q("zone_map_skipping_audit").spark_fn(spark, sf_dir).collect()
-    con = _duck(sf_dir)
+    con = duck_con(sf_dir)
     (n_orders,) = con.sql("SELECT count(*) FROM orders").fetchall()[0]
     assert sum(r["n_rows"] for r in rows) == n_orders
     for r in rows:
@@ -83,7 +73,7 @@ def test_bcubed_bounds_and_f1_consistency(spark, sf_dir):
 
 def test_jsd_symmetric_bounded_and_complete(spark, sf_dir):
     rows = _q("jsd_source_divergence").spark_fn(spark, sf_dir).collect()
-    con = _duck(sf_dir)
+    con = duck_con(sf_dir)
     (n_src,) = con.sql(
         "SELECT count(DISTINCT source) FROM documents"
     ).fetchall()[0]
@@ -158,7 +148,7 @@ def test_shapley_efficiency_axiom(spark, sf_dir):
         spark, sf_dir
     ).collect()
     assert len(rows) == 5
-    con = _duck(sf_dir)
+    con = duck_con(sf_dir)
     # efficiency: Shapley values sum to the grand coalition's coverage
     # = total distinct shingles in the corpus
     (total,) = con.sql(
@@ -195,7 +185,7 @@ def test_propensity_match_balances_propensity(spark, sf_dir):
 def test_stream_cms_matches_batch_sketch_and_bounds(spark, sf_dir):
     rows = _q("stream_cms_user_counts").spark_fn(spark, sf_dir).collect()
     assert len(rows) == 10
-    con = _duck(sf_dir)
+    con = duck_con(sf_dir)
     # CM guarantee: estimate never undercounts; overestimate bounded
     # by eps*N with eps = e/w (loose check at 4x the bound)
     (n_total,) = con.sql("SELECT count(*) FROM events").fetchall()[0]

@@ -19,22 +19,11 @@ verbatim, not merely present on one side.
 
 from __future__ import annotations
 
-import os
-import sys
-
-import duckdb
 import pytest
-
-sys.path.insert(
-    0,
-    os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-    ),
-)
-from selfcheck import table_hash  # noqa: E402
 
 from swat_mapreduce_spark.queries import load_all
 from swat_mapreduce_spark.queries.scale_patterns import _WEDGE_MAX_DEG
+from tools.selfcheck import assert_matches_oracle, duck_con
 
 REG = load_all()
 
@@ -64,30 +53,6 @@ def planted(spark, tmp_path_factory):
     return str(tmp)
 
 
-def _both(spark, planted, name):
-    """Run query + oracle on the planted dir; assert identical hash;
-    return the Spark rows."""
-    q = REG[name]
-    sdf = q.spark_fn(spark, planted)
-    scols = sorted(sdf.columns)
-    srows = [tuple(r[c] for c in scols) for r in sdf.collect()]
-    con = duckdb.connect()
-    for t in ("lineitem", "part"):
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{planted}/{t}.parquet/*.parquet')"
-        )
-    dcols = sorted(d[0] for d in con.execute(q.oracle).description)
-    res = con.execute(f"SELECT {', '.join(dcols)} FROM ({q.oracle}) t")
-    drows = res.fetchall()
-    sh, sn = table_hash(scols, srows)
-    dh, dn = table_hash(dcols, drows)
-    assert (sn, scols, sh) == (dn, dcols, dh), (
-        f"{name}: spark {sn} rows hash {sh} != duckdb {dn} rows hash {dh}"
-    )
-    return sdf.collect()
-
-
 def test_cap_constant_sane():
     assert len(_CELEB_LEAVES) > _WEDGE_MAX_DEG >= len(_SMALL_LEAVES)
 
@@ -102,7 +67,7 @@ def test_cap_constant_sane():
     ],
 )
 def test_celebrity_wedges_dropped_identically(spark, planted, name, pair_cols):
-    rows = _both(spark, planted, name)
+    rows = assert_matches_oracle(spark, REG[name], planted)
     assert rows, f"{name}: small-hub candidates must survive the cap"
     for r in rows:
         for c in pair_cols:
@@ -116,7 +81,9 @@ def test_celebrity_wedges_dropped_identically(spark, planted, name, pair_cols):
 
 
 def test_lcc_excludes_capped_node_identically(spark, planted):
-    rows = _both(spark, planted, "local_clustering_coefficient")
+    rows = assert_matches_oracle(
+        spark, REG["local_clustering_coefficient"], planted
+    )
     parts = {r["part"] for r in rows}
     assert 100 not in parts, "celebrity hub must be excluded from LCC"
     # the triangle-closing edge gives 500 and 501 degree 2 with one
@@ -131,7 +98,7 @@ def test_rich_club_unaffected_by_celebrity(spark, planted):
     it must still hash-match its oracle on a >cap-degree graph and
     COUNT the celebrity: the k=2 tier (degree > 2) is exactly
     {hub 100 (d=130), hub 200 (d=3)} — the >cap node is present."""
-    rows = _both(spark, planted, "rich_club_coefficient")
+    rows = assert_matches_oracle(spark, REG["rich_club_coefficient"], planted)
     k2 = next(r for r in rows if r["min_degree_excl"] == 2)
     assert k2["n_nodes"] == 2 and k2["n_edges"] == 0
 
@@ -141,12 +108,7 @@ def test_cap_actually_bound(spark, planted):
     8385, so a run without the cap could not produce the 2-row
     candidate sets asserted above. Recompute uncapped candidates in
     DuckDB to prove the planted graph would exercise the blowup."""
-    con = duckdb.connect()
-    for t in ("lineitem", "part"):
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{planted}/{t}.parquet/*.parquet')"
-        )
+    con = duck_con(planted)
     n = con.execute(
         """
         WITH items AS (
@@ -177,7 +139,7 @@ def test_ktruss_support_capped_identically(spark, planted):
     wedge centers are small — so k=3 keeps exactly its 3 edges, k>=4
     keeps none, and the 130 celebrity-star edges (no triangles, and
     hub 100 above the cap) contribute zero support."""
-    rows = _both(spark, planted, "ktruss_support_ladder")
+    rows = assert_matches_oracle(spark, REG["ktruss_support_ladder"], planted)
     by_k = {r["k"]: r for r in rows}
     assert sorted(by_k) == [3, 4, 5, 6]
     # 130 celebrity + 3 small-star + 1 closing edge

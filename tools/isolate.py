@@ -28,6 +28,7 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=5)
     args = ap.parse_args()
 
+    from bench import warm_up
     from swat_mapreduce_spark.queries import load_all
     from swat_mapreduce_spark.session import get_spark
 
@@ -35,13 +36,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     reg = load_all()
 
-    # Same machinery warmup as bench.py so rep 1 isn't pure JIT.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    def _pd_identity(it):
-        yield from it
-
-    spark.range(10_000).mapInPandas(_pd_identity, "id long").count()
+    # bench.py's warm-up, so rep 1 is measured as warm as bench's
+    warm_up(spark, reg, args.sf)
 
     out: dict[str, dict] = {}
     for name in args.queries:

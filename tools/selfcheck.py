@@ -59,29 +59,86 @@ def norm_value(v):
     return str(v)
 
 
-def table_hash(cols: list[str], rows: list[tuple]) -> tuple[str, int]:
+def row_lines(cols: list[str], rows: list[tuple]) -> list[str]:
+    """One normalized line per row, columns in name order."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted(
-        "\x01".join(norm_value(r[i]) for i in order) for r in rows
-    )
+    return ["\x01".join(norm_value(r[i]) for i in order) for r in rows]
+
+
+def table_hash(cols: list[str], rows: list[tuple]) -> tuple[str, int]:
+    lines = sorted(row_lines(cols, rows))
     h = hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
     return h, len(rows)
 
 
-def run(sf_dir: str, only: list[str] | None = None) -> int:
+def duck_con(sf_dir: str):
+    """A DuckDB connection with one view per testdata table under
+    ``sf_dir`` — the only tables an oracle may read.
+    ``<table>.parquet`` is either one file or a directory of part
+    files (a Spark write); tables with neither are skipped."""
     import duckdb
 
-    from swat_mapreduce_spark.queries import load_all
-    from swat_mapreduce_spark.session import get_spark
     from swat_mapreduce_spark.sources.readers import TABLES
 
-    spark = get_spark("selfcheck", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isdir(path):
+            path = os.path.join(path, "*.parquet")
+        elif not os.path.isfile(path):
+            continue
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
 
+
+def spark_result(spark, q, sf_dir: str) -> tuple[list[str], list]:
+    """Build and collect ``q``'s Spark side: ``(columns, Rows)``."""
+    try:
+        sdf = q.spark_fn(spark, sf_dir)
+        return sdf.columns, sdf.collect()
+    finally:
+        # per-query persist() blocks (LSH/minhash/charlm) would
+        # otherwise accumulate for the session lifetime
+        spark.catalog.clearCache()
+
+
+def duck_result(con, sql: str) -> tuple[list[str], list[tuple]]:
+    """Run an oracle: ``(columns, rows)``. Fetched via Arrow, NOT
+    fetchall(): duckdb's fetchall folds HUGEINT into plain int, masking
+    the decimal128-vs-int64 drift a type-aware hash catches."""
+    tbl = con.sql(sql).arrow()
+    return tbl.column_names, list(zip(*(c.to_pylist() for c in tbl.columns)))
+
+
+def assert_matches_oracle(spark, q, sf_dir: str, con=None) -> list:
+    """Oracle check: sorted column names, row count and value
+    hash of ``q`` equal its oracle's over the same parquet. Returns the
+    Spark Rows so callers can pin extra semantics on them."""
+    scols, srows = spark_result(spark, q, sf_dir)
+    dcols, drows = duck_result(con or duck_con(sf_dir), q.oracle)
+    # raise, not assert: the check must survive python -O
+    if sorted(scols) != sorted(dcols):
+        raise AssertionError(
+            f"{q.name}: cols spark={sorted(scols)} duck={sorted(dcols)}"
+        )
+    (sh, sn), (dh, dn) = table_hash(scols, srows), table_hash(dcols, drows)
+    if (sn, sh) != (dn, dh):
+        sset, dset = set(row_lines(scols, srows)), set(row_lines(dcols, drows))
+        diff = [f"spark-only: {x[:200]}" for x in list(sset - dset)[:3]]
+        diff += [f"duck-only : {x[:200]}" for x in list(dset - sset)[:3]]
+        raise AssertionError(
+            f"{q.name}: spark({sn},{sh}) duck({dn},{dh})\n      "
+            + "\n      ".join(diff)
+        )
+    return srows
+
+
+def run(sf_dir: str, only: list[str] | None = None) -> int:
+    from swat_mapreduce_spark.queries import load_all
+    from swat_mapreduce_spark.session import get_spark
+
+    spark = get_spark("selfcheck", shuffle_partitions=8)
+    con = duck_con(sf_dir)
     reg = load_all()
     names = only or sorted(reg)
     failures = 0
@@ -89,63 +146,21 @@ def run(sf_dir: str, only: list[str] | None = None) -> int:
         q = reg[name]
         t0 = time.time()
         try:
-            sdf = q.spark_fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-            sh, sn = table_hash(scols, srows)
+            if q.oracle is None:
+                n = len(spark_result(spark, q, sf_dir)[1])
+                tag = "rows  "
+            else:
+                n = len(assert_matches_oracle(spark, q, sf_dir, con))
+                tag = "OK    "
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name:28s} spark error: {str(e).splitlines()[0][:160]}")
             failures += 1
+            # a mismatch keeps its diff sample; an error its first line
+            msg = str(e)
+            if not isinstance(e, AssertionError):
+                msg = msg.splitlines()[0][:160]
+            print(f"FAIL  {name:28s} {type(e).__name__}: {msg}")
             continue
-        finally:
-            # per-query persist() blocks (LSH/minhash/charlm) would
-            # otherwise accumulate for the 281-query session lifetime
-            spark.catalog.clearCache()
-        if q.oracle is None:
-            print(f"rows  {name:28s} {sn:6d} rows (no oracle) [{time.time()-t0:.1f}s]")
-            continue
-        try:
-            res = con.sql(q.oracle)
-            dcols = [c for c in res.columns]
-            # fetch via Arrow, NOT fetchall(): duckdb's fetchall folds
-            # HUGEINT into plain int, masking the decimal128-vs-int64
-            # drift the driver's type-aware hash catches (VERDICT r1)
-            atbl = res.arrow()
-            dmaps = atbl.to_pylist()
-            drows = [tuple(m[c] for c in dcols) for m in dmaps]
-            dh, dn = table_hash(dcols, drows)
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name:28s} duckdb error: {str(e).splitlines()[0][:160]}")
-            failures += 1
-            continue
-        ok = sn == dn and sorted(scols) == sorted(dcols) and sh == dh
-        if ok:
-            print(f"OK    {name:28s} {sn:6d} rows hash={sh} [{time.time()-t0:.1f}s]")
-        else:
-            failures += 1
-            print(
-                f"FAIL  {name:28s} spark({sn},{sh}) duck({dn},{dh}) "
-                f"cols spark={sorted(scols)} duck={sorted(dcols)}"
-            )
-            # print a tiny diff sample
-            sset = {
-                "\x01".join(
-                    norm_value(r[i])
-                    for i in sorted(range(len(scols)), key=lambda i: scols[i])
-                )
-                for r in srows
-            }
-            dset = {
-                "\x01".join(
-                    norm_value(r[i])
-                    for i in sorted(range(len(dcols)), key=lambda i: dcols[i])
-                )
-                for r in drows
-            }
-            for line in list(sset - dset)[:3]:
-                print(f"      spark-only: {line[:200]}")
-            for line in list(dset - sset)[:3]:
-                print(f"      duck-only : {line[:200]}")
+        print(f"{tag}{name:28s} {n:6d} rows [{time.time()-t0:.1f}s]")
     print(f"\n{len(names) - failures}/{len(names)} queries match")
     return 1 if failures else 0
 

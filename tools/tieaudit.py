@@ -48,10 +48,14 @@ import sys
 import time
 from decimal import ROUND_FLOOR, Decimal
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from selfcheck import norm_value  # noqa: E402
+from tools.selfcheck import (  # noqa: E402
+    duck_con,
+    duck_result,
+    row_lines,
+    spark_result,
+)
 
 HASH_DIGITS = 4
 _P = Decimal(10) ** HASH_DIGITS
@@ -112,10 +116,7 @@ def count_fragile_casts(sql: str) -> int:
 
 def sorted_rows(cols, rows):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    keyed = [
-        ("\x01".join(norm_value(r[i]) for i in order), r) for r in rows
-    ]
-    keyed.sort(key=lambda kv: kv[0])
+    keyed = sorted(zip(row_lines(cols, rows), rows), key=lambda kv: kv[0])
     return order, [r for _, r in keyed]
 
 
@@ -130,13 +131,8 @@ def audit_query(name, q, spark, con, sf_dir):
         "offenders": [],
         "fragile_samples": [],
     }
-    sdf = q.spark_fn(spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    res = con.sql(q.oracle)
-    dcols = list(res.columns)
-    dmaps = res.arrow().to_pylist()
-    drows = [tuple(m[c] for c in dcols) for m in dmaps]
+    scols, srows = spark_result(spark, q, sf_dir)
+    dcols, drows = duck_result(con, q.oracle)
     sorder, ssorted = sorted_rows(scols, srows)
     dorder, dsorted = sorted_rows(dcols, drows)
     min_tie = None
@@ -185,19 +181,11 @@ def audit_query(name, q, spark, con, sf_dir):
 
 
 def run(sf_dir: str, only=None) -> int:
-    import duckdb
-
     from swat_mapreduce_spark.queries import load_all
     from swat_mapreduce_spark.session import get_spark
-    from swat_mapreduce_spark.sources.readers import TABLES
 
     spark = get_spark("tieaudit", shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_con(sf_dir)
     reg = load_all()
     names = only or sorted(n for n in reg if reg[n].oracle is not None)
     out, n_offend = [], 0
@@ -212,8 +200,6 @@ def run(sf_dir: str, only=None) -> int:
             print(f"ERR   {name:32s} {str(e).splitlines()[0][:140]}")
             out.append({"name": name, "error": str(e)[:300]})
             continue
-        finally:
-            spark.catalog.clearCache()
         out.append(rec)
         n_offend += len(rec["offenders"])
         flag = (
