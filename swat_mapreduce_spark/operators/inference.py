@@ -11,6 +11,11 @@ lifecycle in ``python/predict_batch_threaded_local.py``:
   plays the reference's BATCH_SIZE=32 role) — partial final batches are
   automatic
 * stderr/exit-code fragility gone: exceptions surface as task errors
+* task count tracks cores, not object count: every Python task pays a
+  fixed worker set-up (~0.1 s CPU, CLAUDE.md gotcha 16), so a file scan
+  feeding this stage is capped at one split per core by the session
+  (``session._cap_file_splits``), not one split per ~32 files, which
+  is what Spark's 4 MB per-file open cost gives small objects
 
 The scorer is pluggable:
 * ``hash_scorer`` — deterministic md5 logits (functions/hashing.py),

@@ -329,8 +329,12 @@ def binary_inference_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fh.write(r.text.encode("utf-8"))
 
     # scaffold write parallelized: documents arrive as ONE parquet
-    # split, and writing 1k files from a single task is serial I/O
-    docs.repartition(32).foreachPartition(write_part)
+    # split, and writing 1k files from a single task is serial I/O.
+    # One task per core, not more: each Python task pays the worker's
+    # fixed set-up (CLAUDE.md gotcha 16)
+    docs.repartition(spark.sparkContext.defaultParallelism).foreachPartition(
+        write_part
+    )
 
     manifest = docs.select("doc_id")
     objects = read_binary_objects(spark, outdir + "/*.bin").withColumn(

@@ -111,8 +111,10 @@ FROM events
 def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64 round-robin shards → coalesce(4) rewrite. coalesce (not
     repartition) makes the rewrite shuffle-free: each output task
-    drains 16 input files. At 100 TB the same job runs per partition
-    directory with target-size-based file counts."""
+    drains 16 input files. The session's one-split-per-core cap packs
+    the 64 files into at most ``defaultParallelism`` splits first, so
+    the 4-file result needs at least 4 cores. At 100 TB the same job
+    runs per partition directory with target-size-based file counts."""
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value"
     )

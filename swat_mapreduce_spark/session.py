@@ -3,6 +3,14 @@
 Replaces the reference's hand-wired Hadoop ``Job`` configuration
 (``java/PredictDriverCluster.java:14-56``): one declarative session,
 AQE on, Arrow enabled for the pandas-UDF inference path.
+
+Task counts track cores, not input counts. Shuffle partitions follow
+``$SPARK_GRAFT_CPUS`` in ``get_spark``; file-scan splits are capped at
+``sparkContext.defaultParallelism`` (``_cap_file_splits``), which on a
+cluster is the total executor cores. Spark otherwise charges each file
+a 4 MB open cost and packs 1,000 objects of 4-32 KiB into 32 splits,
+and every split feeding a Python stage pays the worker's fixed
+per-task set-up (CLAUDE.md gotcha 16).
 """
 
 from __future__ import annotations
@@ -32,9 +40,10 @@ _DEFAULTS = {
     # Deterministic timestamp semantics across Spark and the DuckDB
     # oracle: everything in UTC.
     "spark.sql.session.timeZone": "UTC",
-    # Sized for local[32] test runs; AQE coalesces below this at
-    # runtime, so it's also safe under an externally-created session
-    # (the correctness driver's default would otherwise be 200).
+    # get_spark always overrides this from $SPARK_GRAFT_CPUS; the
+    # literal is what ensure_engine_conf gives an externally-created
+    # session (the correctness driver's default would otherwise be 200).
+    # AQE coalesces below it at runtime.
     "spark.sql.shuffle.partitions": "32",
     # Keep stderr clean for harnesses that capture output tails (the
     # stage progress bar interleaves carriage returns into logs).
@@ -84,8 +93,7 @@ def get_spark(
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    return spark
+    return _cap_file_splits(builder.getOrCreate())
 
 
 def ensure_engine_conf(spark: SparkSession) -> SparkSession:
@@ -96,4 +104,19 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:  # noqa: BLE001 — non-runtime-settable conf: keep going
             pass
+    return _cap_file_splits(spark)
+
+
+def _cap_file_splits(spark: SparkSession) -> SparkSession:
+    """At most one file-scan split per core. When a scan would produce
+    more splits than that, Spark re-packs its files by bytes into about
+    ``defaultParallelism`` splits; smaller scans keep their layout.
+    1,000 objects of 4-32 KiB on 4 cores: 32 -> 4 payload-scorer tasks
+    (CLAUDE.md gotcha 16). Setting a conf builds the session's SQL state
+    here rather than at the first query (~0.4 s on 4 cores, moved into
+    session start, not added)."""
+    spark.conf.set(
+        "spark.sql.files.maxPartitionNum",
+        str(spark.sparkContext.defaultParallelism),
+    )
     return spark

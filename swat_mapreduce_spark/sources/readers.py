@@ -116,7 +116,14 @@ def read_binary_objects(spark: SparkSession, path_glob: str) -> DataFrame:
     ``parallelPartitionDiscovery.threshold`` (32) Spark launches a
     one-task-per-file distributed listing job — 25× slower than a
     single-directory listing at 1k objects, and a full cluster job
-    before any data is read at 100 TB object counts."""
+    before any data is read at 100 TB object counts.
+
+    Splits: Spark charges each file ``spark.sql.files.openCostInBytes``
+    (4 MB) on top of its length and packs files into splits of up to
+    128 MB, so 1,000 objects of 4-32 KiB would become 32 splits holding
+    ~600 KB each. The engine session caps a scan at one split per core
+    (``session._cap_file_splits``); past the cap Spark re-packs the
+    files by bytes, so splits carry about equal bytes."""
     head, tail = os.path.split(path_glob)
     if head and any(c in tail for c in "*?["):
         return (

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import hashlib
+import math
 
 import pytest
 
@@ -76,6 +77,93 @@ def test_binary_file_source(spark, tmp_path):
     assert len(rows) == 1
     assert bytes(rows[0].content) == b"\x89PNG fakebytes"
     assert rows[0].length == 14
+
+
+@pytest.fixture(scope="module")
+def tiny_objects(tmp_path_factory):
+    """200 small distinct objects named ``<doc_id>.bin``: far more files
+    than cores, the shape Spark would pack into one split per ~4 MB of
+    open cost (7 splits on local[4] without a cap)."""
+    d = tmp_path_factory.mktemp("tiny_objects")
+    payloads = {}
+    for i in range(200):
+        payloads[i] = f"object-{i}:".encode() * (1 + i % 7)
+        (d / f"{i}.bin").write_bytes(payloads[i])
+    return str(d / "*.bin"), payloads
+
+
+def _expected_payload_prediction(content: bytes) -> tuple[str, float]:
+    """predict_batch_from_payload in plain Python: key = md5(content)
+    hex; logit i = nibbles [4*(i%8), 4*(i%8)+4) of md5(f"{key}:{i//8}")
+    / 4096 - 8; decode failure (first md5 byte of f"{key}:decode" < 13)
+    gives (class 0, 0.0); else softmax at the first argmax."""
+    from swat_mapreduce_spark.labels import CLASS_NAMES
+
+    key = hashlib.md5(content).hexdigest()
+    logits = []
+    for i in range(len(CLASS_NAMES)):
+        h = hashlib.md5(f"{key}:{i // 8}".encode()).hexdigest()
+        logits.append(int(h[4 * (i % 8) : 4 * (i % 8) + 4], 16) / 4096.0 - 8.0)
+    if int(hashlib.md5(f"{key}:decode".encode()).hexdigest()[:2], 16) < 13:
+        return CLASS_NAMES[0], 0.0
+    top = logits.index(max(logits))
+    return CLASS_NAMES[top], math.exp(logits[top]) / sum(map(math.exp, logits))
+
+
+def test_binary_scan_splits_capped_at_cores(spark, tiny_objects):
+    """Many small objects scan as at most one split per core, so the
+    Python scorer downstream runs no more tasks than cores."""
+    from swat_mapreduce_spark.sources.readers import read_binary_objects
+
+    df = read_binary_objects(spark, tiny_objects[0])
+    assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+
+
+def test_payload_scorer_matches_hashlib_on_capped_scan(spark, tiny_objects):
+    """The capped scan feeds the payload scorer every object exactly
+    once: (doc_id, class, prob) equals a hashlib computation over each
+    object's bytes."""
+    from swat_mapreduce_spark.operators.inference import (
+        predict_batch_from_payload,
+    )
+    from swat_mapreduce_spark.sources.readers import read_binary_objects
+
+    glob_path, payloads = tiny_objects
+    objects = read_binary_objects(spark, glob_path).withColumn(
+        "doc_id",
+        F.regexp_extract(F.col("path"), r"(\d+)\.bin$", 1).cast("long"),
+    )
+    rows = predict_batch_from_payload(objects).collect()
+    got = {r.doc_id: (r["class"], r.prob) for r in rows}
+    assert len(rows) == len(got) == len(payloads)
+    expected = {i: _expected_payload_prediction(b) for i, b in payloads.items()}
+    assert got.keys() == expected.keys()
+    for doc_id, (cls, prob) in expected.items():
+        assert got[doc_id][0] == cls, doc_id
+        assert got[doc_id][1] == pytest.approx(prob, rel=1e-12, abs=1e-15), doc_id
+    # the fixture exercises both the softmax rows and the fallback rows
+    assert {p == 0.0 for _, p in expected.values()} == {True, False}
+
+
+def test_ensure_engine_conf_caps_file_splits(spark):
+    """The driver's vanilla session gets the split cap through
+    ensure_engine_conf alone; every conf is restored afterwards."""
+    from swat_mapreduce_spark.session import ensure_engine_conf
+
+    key = "spark.sql.files.maxPartitionNum"
+    before = dict(spark.conf.getAll)
+    try:
+        spark.conf.unset(key)
+        assert key not in dict(spark.conf.getAll)
+        ensure_engine_conf(spark)
+        assert spark.conf.get(key) == str(spark.sparkContext.defaultParallelism)
+    finally:
+        for k in dict(spark.conf.getAll).keys() - before.keys():
+            spark.conf.unset(k)
+        for k, v in before.items():
+            if spark.conf.isModifiable(k):
+                spark.conf.set(k, v)
+    assert dict(spark.conf.getAll) == before
 
 
 def test_checkpoint_unwrap_rules():
