@@ -43,9 +43,16 @@ def asum(arr: Column) -> Column:
 
 def softmax(arr: Column) -> Column:
     """Element-wise softmax over array<double>
-    (mirror of ``F.softmax(dim=1)``, predict_batch_threaded_local.py:113)."""
-    total = asum(F.transform(arr, lambda x: F.exp(x)))
-    return F.transform(arr, lambda x: F.exp(x) / total)
+    (mirror of ``F.softmax(dim=1)``, predict_batch_threaded_local.py:113).
+
+    The sum is passed INTO the lambda as an argument
+    (``array_repeat`` + ``zip_with``), never captured from outside:
+    a lambda that reads an outer ``asum`` re-sums the row once per
+    element, O(n²) (CLAUDE.md gotcha 17)."""
+    e = F.transform(arr, lambda x: F.exp(x))
+    return F.zip_with(
+        e, F.array_repeat(asum(e), F.size(arr)), lambda x, t: x / t
+    )
 
 
 def argmax(arr: Column) -> Column:

@@ -93,29 +93,15 @@ def logits_array(col: Column, n: int = 30) -> Column:
     expressions, mirrors the model score vector shape
     (``python/predict_batch_threaded_local.py:113-115``).
 
-    Block-derived: the ceil(n/8) md5 digests are materialized ONCE in
-    an array-of-blocks expression and the single-level lambda only
-    slices nibbles out of them — ceil(n/8) md5 evaluations per row
-    (4 for n=30) instead of one per class. The lambda references the
-    outer ``blocks`` column expression, never another lambda's
-    variable, so the nested-lambda name-collision hazard (see round-1
-    minhash incident, CLAUDE.md gotcha 1) does not apply."""
-    n_blocks = (n + LOGIT_PER_BLOCK - 1) // LOGIT_PER_BLOCK
-    blocks = F.array(*[F.md5(salted(col, b)) for b in range(n_blocks)])
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n - 1)),
-        lambda i: F.conv(
-            F.substr(
-                F.element_at(blocks, (i / LOGIT_PER_BLOCK).cast("int") + 1),
-                (i % LOGIT_PER_BLOCK) * LOGIT_NIBBLES + 1,
-                F.lit(LOGIT_NIBBLES),
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        / LOGIT_SCALE
-        - LOGIT_SHIFT,
-    )
+    Unrolled into ``n`` :func:`logit` elements, so the whole vector
+    stays inside whole-stage codegen, which evaluates each of the
+    ceil(n/8) distinct md5 digests once per row as a common
+    subexpression (4 for n=30). NOT a ``transform`` over the class
+    indices 0..n-1: a higher-order function re-evaluates any
+    outer subtree its lambda reads once per element and shares
+    nothing, so that form paid 30 × 4 = 120 digests per row
+    (CLAUDE.md gotcha 17)."""
+    return F.array(*[logit(col, i) for i in range(n)])
 
 
 def decode_ok(col: Column) -> Column:

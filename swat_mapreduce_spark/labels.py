@@ -10,7 +10,8 @@ index semantics: sorted position = class index,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 CLASS_NAMES: list[str] = [
     "aerosol_cans",
@@ -50,14 +51,16 @@ assert NUM_CLASSES == 30
 assert CLASS_NAMES == sorted(CLASS_NAMES)
 
 
-def labels_df(spark: SparkSession) -> DataFrame:
-    """30-row label dictionary ``(label_idx int, class_name string)``.
-
-    Tiny dim table — always broadcast when joined (SURVEY.md §2A #14).
-    """
-    return spark.createDataFrame(
-        list(enumerate(CLASS_NAMES)), "label_idx int, class_name string"
-    )
+def class_name_at(idx: Column, names: list[str] = CLASS_NAMES) -> Column:
+    """``names[idx]``, with an out-of-range or null index →
+    ``names[0]`` (python/predict_batch_threaded_local.py:159;
+    SURVEY.md §2A #14) — the same rows as a left join on the
+    ``(label_idx, class_name)`` dictionary plus ``coalesce`` to
+    ``names[0]``, but a per-row literal-array lookup: no join and no
+    extra Spark job. The guard keeps ``[idx]`` in range, so it never
+    raises under ANSI mode."""
+    in_range = (idx >= 0) & (idx < len(names))
+    return F.when(in_range, F.lit(names)[idx]).otherwise(F.lit(names[0]))
 
 
 def labels_values_sql() -> str:
@@ -72,7 +75,7 @@ def derive_class_names(path: str) -> list[str]:
     file → stripped non-empty lines (order preserved);
     directory → sorted subdirectory names;
     else → sorted stems of the files inside.
-    Driver-side (tiny), result broadcast via labels_df-style dim.
+    Driver-side (tiny); rows look names up via :func:`class_name_at`.
     """
     import os
 

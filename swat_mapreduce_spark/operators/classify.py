@@ -1,5 +1,5 @@
 """The reference pipeline, Spark-first: manifest → clean → score →
-softmax/top-1 → label join → error fallback → formatted, key-sorted
+softmax/top-1 → label lookup → error fallback → formatted, key-sorted
 predictions.
 
 Reproduces the end-to-end dataflow of ``thanhbinh2701/SWAT_mapreduce``
@@ -24,9 +24,10 @@ The model itself is replaced by the deterministic md5-logit stand-in
 oracle-checkable in DuckDB; the real Arrow-batched inference surface
 (pluggable scorer, torch-gated) lives in operators/inference.py.
 
-Scale notes: scoring is per-row JVM expression work (no shuffle, no
-Python); the label join broadcasts a 30-row dim; the only shuffle in
-the whole plan is the final global sort, which the reference also pays
+Scale notes: scoring and the label lookup are per-row JVM expression
+work (no join, no shuffle, no Python — ceil(30/8) = 4 md5 digests per
+row, labels a literal-array index); the only shuffle in the whole
+plan is the final global sort, which the reference also pays
 (its MR key-sort) — and which a 100 TB run would replace with
 ``sortWithinPartitions`` unless a totally-ordered output is demanded.
 """
@@ -41,7 +42,12 @@ from swat_mapreduce_spark.functions import rounding as R
 from swat_mapreduce_spark.functions import arrays as A
 from swat_mapreduce_spark.functions import hashing as H
 from swat_mapreduce_spark.functions.text import format_prob
-from swat_mapreduce_spark.labels import CLASS_NAMES, NUM_CLASSES, labels_df
+from swat_mapreduce_spark.labels import (
+    CLASS_NAMES,
+    NUM_CLASSES,
+    class_name_at,
+    derive_class_names,
+)
 
 # Wart lines injected into the synthetic manifest (FIXTURES.md §B1).
 # Shared constant between the Spark builder and the DuckDB oracle.
@@ -155,35 +161,26 @@ def predict_top1(scored: DataFrame) -> DataFrame:
 def attach_labels(
     preds: DataFrame, spark: SparkSession, labels_path: str | None = None
 ) -> DataFrame:
-    """Broadcast-join the label dict; out-of-range index →
-    class_names[0] (python/predict_batch_threaded_local.py:159).
+    """Add ``class`` = the label of ``pred_idx``; out-of-range or null
+    index → class_names[0] (python/predict_batch_threaded_local.py:159),
+    via the literal lookup :func:`labels.class_name_at` — no join.
 
     ``labels_path`` loads a custom vocabulary with the reference's
     derivation rules (file lines / sorted dir names / sorted stems,
     labels.derive_class_names); default is the built-in 30-class set.
+    ``spark`` is unused; it is kept for existing callers.
     """
-    if labels_path is None:
-        names = CLASS_NAMES
-        labels = labels_df(spark)
-    else:
-        from swat_mapreduce_spark.labels import derive_class_names
-
+    names = CLASS_NAMES
+    if labels_path is not None:
         names = derive_class_names(labels_path)
-        labels = spark.createDataFrame(
-            list(enumerate(names)), "label_idx int, class_name string"
-        )
-    return (
-        preds.join(F.broadcast(labels), preds.pred_idx == labels.label_idx, "left")
-        .withColumn("class", F.coalesce("class_name", F.lit(names[0])))
-        .drop("label_idx", "class_name")
-    )
+    return preds.withColumn("class", class_name_at(F.col("pred_idx"), names))
 
 
 def predict(
     lines: DataFrame, spark: SparkSession, labels_path: str | None = None
 ) -> DataFrame:
     """Manifest ``line`` rows → ``(image_path, pred_idx, prob, class)``:
-    clean → score → softmax/top-1 → label join. Works on batch and
+    clean → score → softmax/top-1 → label lookup. Works on batch and
     streaming frames alike (every stage is stateless per row)."""
     preds = predict_top1(score(clean_manifest(lines)))
     return attach_labels(preds, spark, labels_path=labels_path)

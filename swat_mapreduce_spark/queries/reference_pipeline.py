@@ -11,7 +11,12 @@ from swat_mapreduce_spark.functions import rounding as R
 from swat_mapreduce_spark.functions import arrays as A
 from swat_mapreduce_spark.functions import hashing as H
 from swat_mapreduce_spark.functions.text import sanitize_filename
-from swat_mapreduce_spark.labels import CLASS_NAMES, NUM_CLASSES, labels_values_sql
+from swat_mapreduce_spark.labels import (
+    CLASS_NAMES,
+    NUM_CLASSES,
+    class_name_at,
+    labels_values_sql,
+)
 from swat_mapreduce_spark.operators import classify
 from swat_mapreduce_spark.queries import register
 
@@ -150,16 +155,9 @@ LEFT JOIN {labels_values_sql()} ON g.i = labels.label_idx
 
 @register("label_lookup_guard", oracle=_LABEL_GUARD_ORACLE)
 def label_lookup_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from swat_mapreduce_spark.labels import labels_df
-
-    idx = spark.range(0, 36).select(F.col("id").alias("idx"))
-    labels = F.broadcast(labels_df(spark))
-    return (
-        idx.join(labels, idx.idx == labels.label_idx, "left")
-        .select(
-            "idx",
-            F.coalesce("class_name", F.lit(CLASS_NAMES[0])).alias("class"),
-        )
+    idx = F.col("id")
+    return spark.range(0, 36).select(
+        idx.alias("idx"), class_name_at(idx).alias("class")
     )
 
 

@@ -76,6 +76,47 @@ def test_argmax_first_index_tiebreak(spark):
     assert row.i == 1
 
 
+def test_softmax_matches_left_fold_numpy(spark):
+    """Every softmax element is exactly exp(x) / Σexp, the sum taken as
+    a left fold (F.aggregate's order), for uniform, tied, spread and
+    logit-range rows. The exps come from the JVM: its StrictMath.exp
+    and numpy's exp differ by 1 ulp on some inputs."""
+    import numpy as np
+
+    from swat_mapreduce_spark.functions import arrays as A
+
+    rows = [
+        [0.0, 0.0, 0.0],
+        [1.0, 3.0, 3.0, 0.0],
+        [-8.0, -0.5, 0.25, 7.999755859375],
+        [float(i) / 4 - 4 for i in range(30)],
+    ]
+    df = spark.createDataFrame([(r,) for r in rows], "arr array<double>")
+    got = df.select(
+        F.transform("arr", F.exp).alias("e"), A.softmax(F.col("arr")).alias("p")
+    ).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        e = np.array(r.e)
+        total = 0.0
+        for v in e:
+            total += v
+        assert r.p == list(e / total)
+
+
+def test_attach_labels_custom_vocabulary(spark, tmp_path):
+    """A custom vocabulary maps in-range indices to their names and
+    every out-of-range or null index to names[0]
+    (python/predict_batch_threaded_local.py:159)."""
+    labels = tmp_path / "labels.txt"
+    labels.write_text("cat\ndog\n")
+    idx = [0, 1, -1, 2, 29, None]
+    preds = spark.createDataFrame([(i,) for i in idx], "pred_idx int")
+    out = classify.attach_labels(preds, spark, labels_path=str(labels))
+    got = {r.pred_idx: r["class"] for r in out.collect()}
+    assert got == {0: "cat", 1: "dog", -1: "cat", 2: "cat", 29: "cat", None: "cat"}
+
+
 def test_tsv_sink_reference_format(spark, sf_dir, tmp_path):
     """TextOutputFormat parity: ``path\\tclass,prob`` lines
     (java/PredictDriverCluster.java:39,43)."""

@@ -46,15 +46,30 @@ def test_topk_plans_take_ordered(spark, sf_dir):
 
 def test_classify_pipeline_stays_jvm_side(spark, sf_dir):
     """Scoring is pure JVM expressions: no Python eval stages anywhere,
-    and the label dim joins via broadcast. (WholeStageCodegen subtrees
-    aren't annotated in un-executed AQE plans, so we assert the
-    JVM-only property instead.)"""
+    and the labels are a per-row literal lookup, so the plan has no
+    join and no broadcast. (WholeStageCodegen subtrees aren't
+    annotated in un-executed AQE plans, so we assert the JVM-only
+    property instead.)"""
     from swat_mapreduce_spark.operators.classify import classify_pipeline
 
     plan = formatted_plan(classify_pipeline(spark, sf_dir))
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
+    assert "Join" not in plan
+    assert "BroadcastExchange" not in plan
+
+
+def test_score_codegen_shares_md5_blocks(spark):
+    """The logit vector is one codegen'd projection in which each of
+    the ceil(30/8) = 4 md5 blocks is computed once per row — not a
+    higher-order function re-digesting per element (CLAUDE.md
+    gotcha 17)."""
+    from swat_mapreduce_spark.operators.classify import score
+
+    paths = spark.createDataFrame([("/x/a.jpg",)], "image_path string")
+    jdf = score(paths).select("logits")._jdf
+    code = jdf.queryExecution().debug().codegenToSeq().mkString("\n")
+    assert code.count("md5Hex(") == 4
 
 
 def test_range_join_is_broadcast_nested_loop(spark, sf_dir):
