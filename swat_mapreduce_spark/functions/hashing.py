@@ -43,8 +43,8 @@ def hash_unit(col: Column, salt=None, nibbles: int = 8) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# SQL-string builders (both dialects) — used to author oracle SQL that is
-# guaranteed to agree with the Column builders above.
+# SQL-string builders (both dialects) — the oracle SQL, and the score
+# stage's wide expressions, parsed in one gateway call (CLAUDE.md gotcha 18).
 # ---------------------------------------------------------------------------
 
 def sql_salted(expr: str, salt_expr: str) -> str:
@@ -52,7 +52,7 @@ def sql_salted(expr: str, salt_expr: str) -> str:
 
 
 def spark_hash_uint(expr: str, nibbles: int = 8) -> str:
-    return f"cast(conv(substr(md5({expr}),1,{nibbles}),16,10) as bigint)"
+    return f"cast(conv(substring(md5({expr}),1,{nibbles}),16,10) as bigint)"
 
 
 def duck_hash_uint(expr: str, nibbles: int = 8) -> str:
@@ -77,37 +77,12 @@ DECODE_SALT = "decode"
 DECODE_FAIL_BELOW = 13  # P(fail) = 13/256 ≈ 5%
 
 
-def logit(col: Column, i) -> Column:
-    """Deterministic pseudo-logit for class ``i`` of ``col`` (a path)."""
+def spark_logit(path_expr: str, i: int) -> str:
+    """Class ``i``'s logit. ``D``: Spark SQL reads ``4096.0`` as DECIMAL."""
     block, off = divmod(int(i), LOGIT_PER_BLOCK)
-    nib = F.substring(
-        F.md5(salted(col, block)), off * LOGIT_NIBBLES + 1, LOGIT_NIBBLES
-    )
-    return (
-        F.conv(nib, 16, 10).cast("bigint") / LOGIT_SCALE - LOGIT_SHIFT
-    )
-
-
-def logits_array(col: Column, n: int = 30) -> Column:
-    """Length-``n`` array<double> of deterministic logits — pure JVM
-    expressions, mirrors the model score vector shape
-    (``python/predict_batch_threaded_local.py:113-115``).
-
-    Unrolled into ``n`` :func:`logit` elements, so the whole vector
-    stays inside whole-stage codegen, which evaluates each of the
-    ceil(n/8) distinct md5 digests once per row as a common
-    subexpression (4 for n=30). NOT a ``transform`` over the class
-    indices 0..n-1: a higher-order function re-evaluates any
-    outer subtree its lambda reads once per element and shares
-    nothing, so that form paid 30 × 4 = 120 digests per row
-    (CLAUDE.md gotcha 17)."""
-    return F.array(*[logit(col, i) for i in range(n)])
-
-
-def decode_ok(col: Column) -> Column:
-    """~95% true; stands in for PIL decode success
-    (``python/predict_batch_threaded_local.py:100-108``)."""
-    return hash_uint(col, DECODE_SALT, 2) >= DECODE_FAIL_BELOW
+    salted_path = sql_salted(path_expr, f"'{block}'")
+    nib = f"substring(md5({salted_path}), {off * LOGIT_NIBBLES + 1}, {LOGIT_NIBBLES})"
+    return f"cast(conv({nib}, 16, 10) as bigint) / {LOGIT_SCALE}D - {LOGIT_SHIFT}D"
 
 
 def duck_logit(path_expr: str, i_expr: str) -> str:
@@ -120,3 +95,25 @@ def duck_logit(path_expr: str, i_expr: str) -> str:
 def duck_decode_ok(path_expr: str) -> str:
     h = duck_hash_uint(sql_salted(path_expr, f"'{DECODE_SALT}'"), 2)
     return f"{h} >= {DECODE_FAIL_BELOW}"
+
+
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def logits_array(path_col: str, n: int = 30) -> Column:
+    """Length-``n`` array<double> of column ``path_col``'s logits, the
+    model score vector (``python/predict_batch_threaded_local.py:113-115``):
+    ONE parsed expression of ``n`` unrolled :func:`spark_logit` elements
+    (one Py4J call; CLAUDE.md gotcha 18), in which whole-stage codegen
+    computes each of the ceil(n/8) md5 digests once per row — unlike a
+    ``transform``, which re-ran all 4 per element (CLAUDE.md gotcha 17)."""
+    q = _quoted(path_col)
+    return F.expr("array(" + ", ".join(spark_logit(q, i) for i in range(n)) + ")")
+
+
+def decode_ok(path_col: str) -> Column:
+    """~95% true; stands in for PIL decode success
+    (``python/predict_batch_threaded_local.py:100-108``)."""
+    h = spark_hash_uint(sql_salted(_quoted(path_col), f"'{DECODE_SALT}'"), 2)
+    return F.expr(f"{h} >= {DECODE_FAIL_BELOW}")

@@ -30,6 +30,8 @@ row, labels a literal-array index); the only shuffle in the whole
 plan is the final global sort, which the reference also pays
 (its MR key-sort) — and which a 100 TB run would replace with
 ``sortWithinPartitions`` unless a totally-ordered output is demanded.
+Plan construction: the score stage is parsed from SQL strings, one Py4J
+call per column; its Column builders cost ~0.23 s per job (gotcha 18).
 """
 
 from __future__ import annotations
@@ -136,10 +138,11 @@ def score(paths: DataFrame, path_col: str = "image_path") -> DataFrame:
 
     Pure JVM expressions — whole-stage codegen, zero shuffle. The real
     model path swaps this stage for operators/inference.py."""
-    c = F.col(path_col)
-    return paths.withColumn(
-        "logits", H.logits_array(c, NUM_CLASSES)
-    ).withColumn("decode_ok", H.decode_ok(c))
+    return paths.select(
+        "*",
+        H.logits_array(path_col, NUM_CLASSES).alias("logits"),
+        H.decode_ok(path_col).alias("decode_ok"),
+    )
 
 
 def predict_top1(scored: DataFrame) -> DataFrame:

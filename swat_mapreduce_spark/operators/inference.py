@@ -47,7 +47,7 @@ _SCORER_STATE: dict = {}
 
 
 def hash_logits_np(paths: pd.Series, num_classes: int = NUM_CLASSES) -> np.ndarray:
-    """Vectorized md5 logits, bit-identical to functions/hashing.logit:
+    """Vectorized md5 logits, bit-identical to functions/hashing.spark_logit:
     one md5 digest per block of 8 classes; logit_i = int(hex nibbles
     [4*(i%8), 4*(i%8)+4) of md5(f"{p}:{i//8}"), 16) / 4096 - 8."""
     n_blocks = (num_classes + 7) // 8

@@ -192,7 +192,7 @@ def softmax_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
         classify.synth_manifest(spark, sf_dir)
     ).distinct()
     scored = paths.withColumn(
-        "logits", H.logits_array(F.col("image_path"), NUM_CLASSES)
+        "logits", H.logits_array("image_path", NUM_CLASSES)
     )
     probs = A.softmax(F.col("logits"))
     return scored.select(

@@ -133,3 +133,83 @@ def test_tsv_sink_reference_format(spark, sf_dir, tmp_path):
         assert cls in CLASS_NAMES
         float(prob)  # %.4f parses
         assert len(prob.split(".")[1]) == 4
+
+
+def _gateway_commands(spark, build) -> int:
+    """Py4J commands this thread sends while ``build()`` runs. Collected
+    proxies send their own delete commands, so GC stays off while
+    counting and py4j's finalizer thread, which flushes deletes queued
+    earlier, is not counted."""
+    import gc
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    me = threading.get_ident()
+    sent = 0
+
+    def counting(*args, **kwargs):
+        nonlocal sent
+        sent += threading.get_ident() == me
+        return send(*args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    client.send_command = counting
+    try:
+        build()
+    finally:
+        client.send_command = send
+        gc.enable()
+    return sent
+
+
+def test_score_plan_builds_in_few_gateway_calls(spark, tmp_path):
+    """Plan construction is paid on every job before any task runs
+    (CLAUDE.md gotcha 18): the 30-logit array is one parsed expression,
+    not ~2,300 Column-builder round trips."""
+    from swat_mapreduce_spark.functions import hashing as H
+    from swat_mapreduce_spark.sources.readers import read_manifest
+
+    manifest = tmp_path / "list.txt"
+    manifest.write_text("/a.jpg\n# c\n/b.jpg\n")
+    lines = read_manifest(spark, str(manifest))
+    assert _gateway_commands(spark, lambda: H.logits_array("image_path", 30)) <= 10
+    assert _gateway_commands(spark, lambda: classify.predict(lines, spark)) <= 800
+
+
+def test_score_matches_numpy_scorer_bit_for_bit(spark):
+    """The JVM score stage equals the Arrow scorer's numpy logits and
+    decode flag exactly, on paths that stress SQL quoting and UTF-8,
+    and keeps its schema (a column name with a backtick included)."""
+    import pandas as pd
+    from pyspark.sql.types import (
+        ArrayType,
+        BooleanType,
+        DoubleType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from swat_mapreduce_spark.operators.inference import (
+        hash_decode_ok_np,
+        hash_logits_np,
+    )
+
+    paths = ["", "﻿/a.jpg", "/a﻿b.jpg", "#x", "a:b:c",
+             "/données/图像.jpg", "'q'", "a\\b", "`tick`"]
+    df = spark.createDataFrame([(p,) for p in paths], "image_path string")
+    scored = classify.score(df)
+    assert scored.schema == StructType([
+        StructField("image_path", StringType(), True),
+        StructField("logits", ArrayType(DoubleType(), True), False),
+        StructField("decode_ok", BooleanType(), True),
+    ])
+    got = {r.image_path: (r.logits, r.decode_ok) for r in scored.collect()}
+    logits = hash_logits_np(pd.Series(paths))
+    ok = hash_decode_ok_np(pd.Series(paths))
+    assert got == {p: (list(logits[i]), bool(ok[i])) for i, p in enumerate(paths)}
+
+    odd = classify.score(df.withColumnRenamed("image_path", "p`a th"), "p`a th")
+    assert sorted(r.logits for r in odd.collect()) == sorted(v[0] for v in got.values())
