@@ -12,7 +12,9 @@ lifecycle in ``python/predict_batch_threaded_local.py``:
   automatic
 * stderr/exit-code fragility gone: exceptions surface as task errors
 * task count tracks cores, not object count: every Python task pays a
-  fixed worker set-up (~0.1 s CPU, CLAUDE.md gotcha 16), so a file scan
+  fixed worker set-up (CLAUDE.md gotcha 16: 0.14-0.22 s CPU per task
+  on stock workers; ``get_spark`` workers, whose daemon loads pyspark
+  from site-packages, skip its archive re-reads), so a file scan
   feeding this stage is capped at one split per core by the session
   (``session._cap_file_splits``), not one split per ~32 files, which
   is what Spark's 4 MB per-file open cost gives small objects
@@ -35,6 +37,7 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -42,7 +45,7 @@ from swat_mapreduce_spark.labels import CLASS_NAMES, NUM_CLASSES
 
 PREDICTION_SCHEMA = "image_path string, class string, prob double"
 
-# per-worker scorer singleton (lazy; survives across Arrow batches)
+# per-worker scorers by _scorer_key (lazy; survive across batches and tasks)
 _SCORER_STATE: dict = {}
 
 
@@ -190,8 +193,15 @@ def torch_scorer(checkpoint_path: str, model_cfg: str = "vitb32_openclip_laion40
     return score
 
 
-def _get_scorer(scorer_factory):
-    key = id(scorer_factory)
+def _scorer_key(scorer_factory) -> str:
+    """Digest of the pickled factory, computed once on the driver. Every
+    task unpickles a fresh factory object, so its ``id()`` would build a
+    new scorer per task; equal factories (the same function, or a
+    ``functools.partial`` over the same checkpoint) share one key."""
+    return hashlib.md5(cloudpickle.dumps(scorer_factory)).hexdigest()
+
+
+def _get_scorer(scorer_factory, key: str):
     if key not in _SCORER_STATE:
         # lazy one-time init per Python worker — the reference re-did
         # this per 32-image batch (java/PredictBatchMapperCluster.java:97)
@@ -209,9 +219,10 @@ def _predict(
     softmax → top-1 → decode-failure fallback (class 0, prob 0.0) →
     label lookup with out-of-range guard."""
     id_name = keyed.columns[0]
+    key = _scorer_key(scorer_factory)
 
     def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        score = _get_scorer(scorer_factory)
+        score = _get_scorer(scorer_factory, key)
         classes = np.array(CLASS_NAMES)
         for pdf in batches:
             logits, ok = score(pdf.iloc[:, -1])

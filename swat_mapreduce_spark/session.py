@@ -11,6 +11,17 @@ cluster is the total executor cores. Spark otherwise charges each file
 a 4 MB open cost and packs 1,000 objects of 4-32 KiB into 32 splits,
 and every split feeding a Python stage pays the worker's fixed
 per-task set-up (CLAUDE.md gotcha 16).
+
+That set-up is pyspark's per-task ``importlib.invalidate_caches()``,
+which re-reads every archive a worker imported pyspark from: 0.14-0.22 s
+CPU per task with stock workers. ``get_spark`` sessions start their
+Python workers from ``site_pyspark_daemon`` (a top-level module next to
+this package), which loads the site-packages pyspark when its version
+matches the JVM's ``pyspark.zip``, so that re-read finds no archive.
+``spark.python.daemon.module`` is a static conf: a session created
+elsewhere and handed to ``ensure_engine_conf`` (the correctness
+driver's vanilla session) keeps stock workers and still pays the
+set-up on every task.
 """
 
 from __future__ import annotations
@@ -18,6 +29,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Top-level module the Python daemon runs (site_pyspark_daemon.py); its
+# directory goes on the workers' path so any driver cwd finds it.
+_DAEMON_MODULE = "site_pyspark_daemon"
+_DAEMON_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Tuned for local[$SPARK_GRAFT_CPUS] testing; on a real cluster the same
 # settings hold except shuffle partitions, which should track cluster
@@ -91,6 +107,9 @@ def get_spark(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
+    conf["spark.python.daemon.module"] = _DAEMON_MODULE
+    py_path = "spark.executorEnv.PYTHONPATH"
+    conf[py_path] = os.pathsep.join(filter(None, [conf.get(py_path), _DAEMON_DIR]))
     for k, v in conf.items():
         builder = builder.config(k, v)
     return _cap_file_splits(builder.getOrCreate())
@@ -98,7 +117,9 @@ def get_spark(
 
 def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine defaults to an externally-created
-    session (the correctness driver hands us its own SparkSession)."""
+    session (the correctness driver hands us its own SparkSession).
+    Static confs such as the Python daemon module cannot be set here, so
+    such a session keeps stock Python workers."""
     for k, v in _DEFAULTS.items():
         try:
             spark.conf.set(k, v)

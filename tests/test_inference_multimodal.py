@@ -2,15 +2,22 @@
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
+import os
 
 import pytest
 
 from pyspark.sql import functions as F
 
 from swat_mapreduce_spark.operators import classify, multimodal
-from swat_mapreduce_spark.operators.inference import predict_batch
+from swat_mapreduce_spark.operators.inference import (
+    _scorer_key,
+    hash_scorer,
+    predict_batch,
+    torch_scorer,
+)
 from swat_mapreduce_spark.sources.readers import read_table
 
 
@@ -35,6 +42,37 @@ def test_inference_paths_match_duckdb_oracle(spark, sf_dir, name):
 
     rows = assert_matches_oracle(spark, load_all()[name], sf_dir)
     assert rows
+
+
+def test_partial_scorer_factory_runs_once_per_worker(spark, tmp_path):
+    """A ``functools.partial`` factory (how a checkpoint is bound) is
+    built once per Python worker across jobs, though every task
+    unpickles a fresh factory object; a distinct factory gets its own
+    scorer. Each call leaves one mark in a file named after its pid."""
+
+    def counting(log_dir, tag):
+        with open(os.path.join(log_dir, f"{tag}-{os.getpid()}"), "a") as f:
+            f.write("x")
+        return hash_scorer()
+
+    paths = spark.range(40, numPartitions=4).select(
+        F.col("id").cast("string").alias("image_path")
+    )
+    for tag in ("a", "a", "a", "b"):
+        factory = functools.partial(counting, str(tmp_path), tag)
+        assert len(predict_batch(paths, factory).collect()) == 40
+    calls = {p.name: p.read_text() for p in tmp_path.iterdir()}
+    assert any(name.startswith("a-") for name in calls)
+    assert any(name.startswith("b-") for name in calls)
+    assert set(calls.values()) == {"x"}, calls
+
+
+def test_scorer_key_separates_factories():
+    a1 = functools.partial(torch_scorer, "a.pt")
+    a2 = functools.partial(torch_scorer, "a.pt")
+    b = functools.partial(torch_scorer, "b.pt")
+    assert _scorer_key(a1) == _scorer_key(a2) != _scorer_key(b)
+    assert _scorer_key(hash_scorer) not in {_scorer_key(a1), _scorer_key(b)}
 
 
 def test_binary_payload_metadata(spark, sf_dir):
