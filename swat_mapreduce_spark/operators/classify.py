@@ -94,7 +94,7 @@ def synth_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionAll(warts)
 
 
-def manifest_sql_duck(sf_dir: str) -> str:
+def manifest_sql_duck() -> str:
     """DuckDB CTE body producing the identical manifest (oracle side).
     DuckDB views for the tables are pre-registered by the driver."""
     path = "'/data/img/' || source || '/' || lang || '_' || doc_id::VARCHAR || '.jpg'"
@@ -213,13 +213,13 @@ def classify_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # manifest so duplicate lines yield duplicate rows.
 # ---------------------------------------------------------------------------
 
-def classify_oracle_sql(sf_dir: str) -> str:
+def classify_oracle_sql() -> str:
     from swat_mapreduce_spark.labels import labels_values_sql
 
     logit = H.duck_logit("p.image_path", "g.i")
     ok = H.duck_decode_ok("c.image_path")
     return f"""
-WITH manifest(line) AS ({manifest_sql_duck(sf_dir)}),
+WITH manifest(line) AS ({manifest_sql_duck()}),
 cleaned AS ({CLEAN_SQL_DUCK}),
 paths AS (SELECT DISTINCT image_path FROM cleaned),
 li AS (

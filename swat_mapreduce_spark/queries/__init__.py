@@ -25,7 +25,7 @@ class QueryEntry:
     # Lazy plan builder for queries whose spark_fn collect()s
     # internally (bounded driver-state patterns): returns the heavy
     # pre-collect DataFrame WITHOUT executing it, so plan tooling
-    # (tools/dumpplan.py, plans/r12 evidence) can explain the real
+    # (query_cli --explain, plans/r12 evidence) can explain the real
     # computation instead of the LocalTableScan of collected rows.
     plan_fn: Callable[[SparkSession, str], DataFrame] | None = None
 

@@ -22,17 +22,15 @@ from swat_mapreduce_spark.queries import register
 
 
 # --- flagship: the whole reference dataflow --------------------------------
-@register("flagship_classify", oracle=classify.classify_oracle_sql(""))
+@register("flagship_classify", oracle=classify.classify_oracle_sql())
 def flagship_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return classify.classify_pipeline(spark, sf_dir)
 
 
 # --- manifest cleaning (SURVEY §2A #1,2,3) ---------------------------------
 _MANIFEST_CLEAN_ORACLE = f"""
-WITH manifest(line) AS ({classify.manifest_sql_duck("")})
-SELECT trim(line) AS image_path FROM manifest
-WHERE length(trim(line)) > 0 AND substr(trim(line), 1, 1) <> '#'
-"""
+WITH manifest(line) AS ({classify.manifest_sql_duck()})
+{classify.CLEAN_SQL_DUCK}"""
 
 
 @register("manifest_clean", oracle=_MANIFEST_CLEAN_ORACLE)
@@ -42,7 +40,7 @@ def manifest_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- basename sanitization (SURVEY §2A #4) ---------------------------------
 _SANITIZE_ORACLE = f"""
-WITH manifest(line) AS ({classify.manifest_sql_duck("")}),
+WITH manifest(line) AS ({classify.manifest_sql_duck()}),
 cleaned AS ({classify.CLEAN_SQL_DUCK})
 SELECT image_path,
        regexp_replace(
@@ -65,9 +63,6 @@ def sanitize_filenames(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- subprocess stdout CSV parse, drop-malformed (SURVEY §2A #3,16) --------
 # Reference: skip empty + '#' lines, split on ',', keep ONLY 3-field rows
 # (java/PredictBatchMapperCluster.java:114-116).
-_CSV_LINES_SPARK = None  # built inline below
-
-
 def _csv_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stand-in for subprocess stdout: mostly valid
     ``path,class,prob`` rows with injected malformed/comment/blank
@@ -163,7 +158,7 @@ def label_lookup_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- softmax / argmax in isolation (SURVEY §2A #11,12) ---------------------
 _SOFTMAX_ORACLE = f"""
-WITH manifest(line) AS ({classify.manifest_sql_duck("")}),
+WITH manifest(line) AS ({classify.manifest_sql_duck()}),
 cleaned AS ({classify.CLEAN_SQL_DUCK}),
 paths AS (SELECT DISTINCT image_path FROM cleaned),
 li AS (
@@ -205,43 +200,12 @@ def softmax_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- the Arrow/mapInPandas inference path, validated by the SAME SQL
 # oracle as the JVM expression path (the scorer is bit-identical) ----------
-def _infer_oracle() -> str:
-    from swat_mapreduce_spark.labels import labels_values_sql
-
-    logit = H.duck_logit("p.image_path", "g.i")
-    ok = H.duck_decode_ok("c.image_path")
-    return f"""
-WITH manifest(line) AS ({classify.manifest_sql_duck("")}),
-cleaned AS ({classify.CLEAN_SQL_DUCK}),
-paths AS (SELECT DISTINCT image_path FROM cleaned),
-li AS (
-    SELECT p.image_path, g.i, {logit} AS logit
-    FROM paths p, generate_series(0, {NUM_CLASSES - 1}) AS g(i)
-),
-sc AS (
-    SELECT image_path, max(logit) AS mx, sum(exp(logit)) AS denom
-    FROM li GROUP BY image_path
-),
-am AS (
-    SELECT li.image_path, min(li.i) AS pred_raw,
-           any_value(sc.mx) AS mx, any_value(sc.denom) AS denom
-    FROM li JOIN sc ON li.image_path = sc.image_path AND li.logit = sc.mx
-    GROUP BY li.image_path
-),
-pred AS (
-    SELECT c.image_path,
-           CASE WHEN {ok} THEN am.pred_raw ELSE 0 END AS pred_idx,
-           CASE WHEN {ok} THEN exp(am.mx) / am.denom ELSE 0.0 END AS prob
-    FROM cleaned c JOIN am ON c.image_path = am.image_path
-)
-SELECT pred.image_path,
-       coalesce(labels.class_name, '{CLASS_NAMES[0]}') AS class,
-       round(prob, 4) AS prob
-FROM pred LEFT JOIN {labels_values_sql()} ON pred.pred_idx = labels.label_idx
+_INFER_ORACLE = f"""
+SELECT image_path, class, prob FROM ({classify.classify_oracle_sql()})
 """
 
 
-@register("infer_mapinpandas", oracle=_infer_oracle())
+@register("infer_mapinpandas", oracle=_INFER_ORACLE)
 def infer_mapinpandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     from swat_mapreduce_spark.operators.inference import predict_batch
 
@@ -352,7 +316,7 @@ def binary_inference_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # within partitions (downstream writers still get locally-ordered
 # output, e.g. for run-length-friendly sinks). The driver's value hash
 # is row-order-insensitive, so the SAME oracle pins this variant.
-@register("flagship_classify_scale", oracle=classify.classify_oracle_sql(""))
+@register("flagship_classify_scale", oracle=classify.classify_oracle_sql())
 def flagship_classify_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     return classify.classify_unsorted(spark, sf_dir).sortWithinPartitions(
         "image_path"

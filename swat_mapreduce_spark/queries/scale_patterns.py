@@ -1571,7 +1571,7 @@ def sliding_p50_value_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Determinism: each 1/ln(deg) weight is snapped to an INTEGER 1e-6
 # unit before the order-free sum (the MI/jsd grid — ln ULP noise gets
 # ~1e-7 relative slack vs the rounding boundary, audited by
-# tieaudit); ranking and the top-20 cut order by the exact integer
+# selfcheck's tie audit); ranking and the top-20 cut order by the exact integer
 # score with (a, b) tie-break. Wedge centers always have deg >= 2, so
 # ln(deg) >= ln 2 — no division hazard.
 _AA_TOPN = 20

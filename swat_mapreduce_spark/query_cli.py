@@ -34,7 +34,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--explain",
         action="store_true",
-        help="print the formatted physical plan instead of rows",
+        help="print the formatted physical plan instead of rows (the "
+        "query's plan_fn, if it has one)",
     )
     p.add_argument(
         "--list", action="store_true", help="list registered query names"
@@ -69,15 +70,23 @@ def main(argv: list[str] | None = None) -> int:
         print(f"unknown query: {args.query!r} (see --list)", file=sys.stderr)
         return 2
 
-    from swat_mapreduce_spark.plans.explain import formatted_plan
-    from swat_mapreduce_spark.session import ensure_engine_conf, get_spark
+    from pyspark.sql import SparkSession
 
-    spark = get_spark("swat-query-cli")
-    ensure_engine_conf(spark)
-    df = reg[args.query].spark_fn(spark, args.sf_dir)
+    from swat_mapreduce_spark.plans.explain import formatted_plan
+    from swat_mapreduce_spark.session import get_spark
+
+    # a caller's session is used as it stands; engine defaults apply
+    # only to a session this run creates
+    spark = SparkSession.getActiveSession() or get_spark("swat-query-cli")
+    entry = reg[args.query]
     if args.explain:
-        print(formatted_plan(df))
-    elif args.format == "show":
+        # a spark_fn that collects internally plans as a LocalTableScan;
+        # its plan_fn is the real computation, unexecuted
+        fn = entry.plan_fn or entry.spark_fn
+        print(formatted_plan(fn(spark, args.sf_dir)))
+        return 0
+    df = entry.spark_fn(spark, args.sf_dir)
+    if args.format == "show":
         df.show(args.limit, truncate=False)
         print(f"({df.count()} rows total)", file=sys.stderr)
     else:

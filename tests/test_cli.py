@@ -106,3 +106,31 @@ def test_query_cli_list_and_unknown(capsys):
     # every registered query advertises its oracle in the listing
     assert "q1_pricing_summary [oracle]" in out
     assert main(["definitely_not_a_query"]) == 2
+
+
+def test_query_cli_leaves_session_confs_unchanged(spark, capsys):
+    """The registry runner, like the CLI, uses a caller's live session
+    as it stands: no app name, shuffle width or engine default rewritten."""
+    before = dict(spark.conf.getAll)
+
+    from swat_mapreduce_spark.query_cli import main
+
+    argv = ["label_lookup_guard", "--sf-dir", "/root/testdata/sf0.001"]
+    assert main(argv + ["--format", "tsv"]) == 0
+    assert capsys.readouterr().out.splitlines()[0] == "idx\tclass"
+    assert dict(spark.conf.getAll) == before
+
+
+def test_query_cli_explain_prints_plan_fn(spark, capsys):
+    """A query whose spark_fn collects internally plans as a
+    LocalTableScan; --explain prints its plan_fn, the real scan."""
+    from swat_mapreduce_spark.plans.explain import formatted_plan
+    from swat_mapreduce_spark.queries import load_all
+    from swat_mapreduce_spark.query_cli import main
+
+    sf_dir = "/root/testdata/sf0.001"
+    q = load_all()["shapley_coverage_attribution"]
+    assert q.plan_fn is not None
+    assert "Scan parquet" not in formatted_plan(q.spark_fn(spark, sf_dir))
+    assert main([q.name, "--sf-dir", sf_dir, "--explain"]) == 0
+    assert "Scan parquet" in capsys.readouterr().out

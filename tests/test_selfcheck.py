@@ -1,8 +1,12 @@
 """The shared oracle check in tools/selfcheck.py: the type-aware hash
-must see the HUGEINT a DuckDB sum() returns, and the views must cover
-both testdata layouts (one file, or a Spark directory of part files)."""
+must see the HUGEINT a DuckDB sum() returns, the views must cover
+both testdata layouts (one file, or a Spark directory of part files),
+and the tie audit must flag bit-different floats near a 4dp tie."""
 
 from __future__ import annotations
+
+import math
+from decimal import Decimal
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -11,7 +15,16 @@ from pyspark.sql import functions as F
 
 from swat_mapreduce_spark.queries import QueryEntry
 from swat_mapreduce_spark.sources.readers import read_table
-from tools.selfcheck import assert_matches_oracle, duck_con, duck_result
+from tools.selfcheck import (
+    DANGER_SCALED,
+    NEAR_SCALED,
+    TieOffense,
+    assert_matches_oracle,
+    check_oracle,
+    count_fragile_casts,
+    duck_con,
+    duck_result,
+)
 
 
 @pytest.fixture(scope="module")
@@ -61,3 +74,46 @@ def test_duck_con_reads_part_file_dirs_and_skips_missing_tables(tables):
     assert sorted(k for (k,) in rows) == [1, 2, 3]
     _, rows = duck_result(con, "SELECT n_name FROM nation")
     assert sorted(n for (n,) in rows) == ["X", "Y"]
+
+
+# --- tie audit: hand-built rows, no Spark ----------------------------------
+_TIE = 0.12345  # exact binary value sits ~4e-14 above the 4dp boundary
+_TIE_Q = QueryEntry("tie_q", None, "SELECT 1")
+
+
+def test_bitdiff_near_a_tie_is_an_offender_and_fails():
+    nudged = math.nextafter(_TIE, 1.0)
+    assert round(nudged, 4) == round(_TIE, 4)  # the value hash agrees
+    spark_res, duck_res = (["x"], [(_TIE,)]), (["x"], [(nudged,)])
+    with pytest.raises(TieOffense) as e:
+        check_oracle(_TIE_Q, spark_res, duck_res)
+    rec = e.value.record
+    assert rec["bitdiff"] == 1 and len(rec["offenders"]) == 1
+    assert rec["offenders"][0]["row"] == 0
+    assert Decimal(rec["offenders"][0]["tie_scaled"]) < DANGER_SCALED
+
+
+def test_bit_identical_near_tie_is_not_an_offender():
+    res = (["x", "k"], [(_TIE, 1), (0.5, 2)])
+    rec = check_oracle(_TIE_Q, res, res)
+    assert rec["float_cells"] == 2
+    assert rec["bitdiff"] == 0 and rec["offenders"] == []
+    assert rec["near_ties"] == 1
+    assert Decimal(rec["min_tie_scaled"]) < NEAR_SCALED
+
+
+def test_count_fragile_casts():
+    assert count_fragile_casts("SELECT CAST(a*b AS DECIMAL(18,4)) FROM t") == 1
+    assert count_fragile_casts("SELECT CAST(round(x) AS DECIMAL(18,0))") == 0
+    assert count_fragile_casts("SELECT (x/y)::DECIMAL(18,4) FROM t") == 1
+
+
+def test_row_count_mismatch_fails_before_tie_analysis():
+    """Unequal row counts must fail the check itself; pairing rows for
+    the tie analysis would otherwise truncate to the shorter side."""
+    nudged = math.nextafter(_TIE, 1.0)
+    spark_res = (["x"], [(_TIE,), (_TIE,)])
+    with pytest.raises(AssertionError, match=r"spark\(2,") as e:
+        check_oracle(_TIE_Q, spark_res, (["x"], [(nudged,)]))
+    assert not isinstance(e.value, TieOffense)
+    assert not hasattr(e.value, "record")

@@ -45,17 +45,9 @@ def audit_one(name: str, df) -> dict:
         "bcast_joins": nodes.count("BroadcastHashJoin")
         + nodes.count("BroadcastNestedLoopJoin"),
         "smj": nodes.count("SortMergeJoin"),
-        "python": sum(
-            nodes.count(n)
-            for n in (
-                "ArrowEvalPython",
-                "BatchEvalPython",
-                "MapInPandas",
-                "FlatMapGroupsInPandas",
-                "PythonMapInArrow",
-                "BatchEvalPythonUDTF",
-            )
-        ),
+        # every Python-worker node names itself: ArrowEvalPython,
+        # MapInArrow, FlatMapCoGroupsInPandas, ArrowAggregatePython, ...
+        "python": sum(1 for n in nodes if re.search("Python|Pandas|Arrow", n)),
         "scans": nodes.count("Scan"),
         "sorts": nodes.count("Sort"),
         # registry-wide no-cartesian contract: pinned at zero by
@@ -449,9 +441,11 @@ def main() -> None:
         f"Scale factor dir: `{sf_dir}`. Counts of plan nodes per query —",
         "`shuffles` = hash/range Exchanges (each is a full network",
         "repartition of its input at 100 TB), `broadcasts` = small-side",
-        "broadcast exchanges, `python` = Arrow/pandas eval stages (the",
-        "deliberate Python surfaces only), `pushed_filters` = parquet",
-        "scans with at least one pushed predicate.",
+        "broadcast exchanges, `python` = Python-worker nodes (any node",
+        "named *Python*/*Pandas*/*Arrow*: the deliberate Python surfaces",
+        "only; a Python data source scan is a plain `BatchScan` and is",
+        "not counted), `pushed_filters` = parquet scans with at least",
+        "one pushed predicate.",
         "",
         "Streaming queries are omitted (they execute on construction;",
         "their aggregation plans mirror the batch twins).",
