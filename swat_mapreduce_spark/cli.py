@@ -26,7 +26,10 @@ manifest fixture does) still flows through untouched — that wart
 stays pinned by the flagship_classify oracle. Scores every path
 (the md5 stand-in scorer; the torch-gated real scorer lives in
 operators/inference.py) and writes the reference-layout TSV
-``path\\tclass,prob`` part files, key-sorted unless ``--no-sort``.
+``path\\tclass,prob`` part files, key-sorted unless ``--no-sort``:
+in one reducer, and so one part file, when Catalyst's size estimate of
+the predictions fits one ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+partition, else by a global ``orderBy`` (sources/sinks.py).
 
 Arg-validation behavior mirrors java/PredictDriverCluster.java:14-20:
 wrong arg count → usage on stderr, exit 2 (argparse convention).

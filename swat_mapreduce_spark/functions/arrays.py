@@ -4,12 +4,17 @@ Softmax / argmax reproduce the reference's in-Python tensor math
 (``python/predict_batch_threaded_local.py:111-117``) as pure Catalyst
 expressions; the vector ops (dot/cosine) back the similarity-search
 operators. All stay inside whole-stage codegen — no Python boundary.
+``argmax`` and ``top1_prob`` take a column name and return Spark SQL
+text, so the classify stage parses each of its columns in one gateway
+call (CLAUDE.md gotcha 18).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from swat_mapreduce_spark.functions.text import sql_ident
 
 
 def explode_nonnull(
@@ -55,17 +60,25 @@ def softmax(arr: Column) -> Column:
     )
 
 
-def argmax(arr: Column) -> Column:
-    """0-based index of the first maximal element — matches
-    ``torch.max(probs, 1)`` first-index tie-breaking
-    (predict_batch_threaded_local.py:115-117)."""
-    return (F.array_position(arr, F.array_max(arr)) - 1).cast("int")
+def argmax(arr: str) -> str:
+    """Spark SQL text: 0-based index of the first maximal element of
+    array column ``arr`` (a column name) — matches ``torch.max(probs,
+    1)`` first-index tie-breaking (predict_batch_threaded_local.py:
+    115-117). Parse with ``F.expr``, alone or inside a larger string
+    (CLAUDE.md gotcha 18)."""
+    a = sql_ident(arr)
+    return f"cast(array_position({a}, array_max({a})) - 1 as int)"
 
 
-def top1_prob(arr: Column) -> Column:
-    """max(softmax(arr)) computed without materializing the full
-    softmax: exp(max)/sum(exp)."""
-    return F.exp(F.array_max(arr)) / asum(F.transform(arr, lambda x: F.exp(x)))
+def top1_prob(arr: str) -> str:
+    """Spark SQL text: max(softmax(arr)) of array column ``arr`` (a
+    column name), computed without materializing the full softmax:
+    exp(max) / sum(exp), the sum a left fold as in :func:`asum`."""
+    a = sql_ident(arr)
+    return (
+        f"exp(array_max({a})) / "
+        f"aggregate(transform({a}, x -> exp(x)), 0.0D, (acc, x) -> acc + x)"
+    )
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from swat_mapreduce_spark.functions.text import sql_ident
+
 
 def salted(col: Column, salt) -> Column:
     """``concat(col, ':', salt)`` — the canonical salting layout."""
@@ -97,10 +99,6 @@ def duck_decode_ok(path_expr: str) -> str:
     return f"{h} >= {DECODE_FAIL_BELOW}"
 
 
-def _quoted(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
 def logits_array(path_col: str, n: int = 30) -> Column:
     """Length-``n`` array<double> of column ``path_col``'s logits, the
     model score vector (``python/predict_batch_threaded_local.py:113-115``):
@@ -108,12 +106,12 @@ def logits_array(path_col: str, n: int = 30) -> Column:
     (one Py4J call; CLAUDE.md gotcha 18), in which whole-stage codegen
     computes each of the ceil(n/8) md5 digests once per row — unlike a
     ``transform``, which re-ran all 4 per element (CLAUDE.md gotcha 17)."""
-    q = _quoted(path_col)
+    q = sql_ident(path_col)
     return F.expr("array(" + ", ".join(spark_logit(q, i) for i in range(n)) + ")")
 
 
 def decode_ok(path_col: str) -> Column:
     """~95% true; stands in for PIL decode success
     (``python/predict_batch_threaded_local.py:100-108``)."""
-    h = spark_hash_uint(sql_salted(_quoted(path_col), f"'{DECODE_SALT}'"), 2)
+    h = spark_hash_uint(sql_salted(sql_ident(path_col), f"'{DECODE_SALT}'"), 2)
     return F.expr(f"{h} >= {DECODE_FAIL_BELOW}")

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 # --- reference warts -------------------------------------------------------
 
 SANITIZE_PATTERN = "[^A-Za-z0-9._-]"  # java/PredictBatchMapperCluster.java:23
+PROB_FORMAT = "%.4f"  # python/predict_batch_threaded_local.py:160
 
 
 def basename(path: Column) -> Column:
@@ -26,7 +27,7 @@ def sanitize_filename(path: Column) -> Column:
 def format_prob(prob: Column) -> Column:
     """``%.4f`` probability rendering
     (python/predict_batch_threaded_local.py:160)."""
-    return F.format_string("%.4f", prob)
+    return F.format_string(PROB_FORMAT, prob)
 
 
 # --- LLM text analysis -----------------------------------------------------
@@ -79,6 +80,20 @@ def char_array(text: Column) -> Column:
     return F.when(F.length(text) >= 1, F.split(text, "")).otherwise(
         F.array().cast("array<string>")
     )
+
+
+# --- Spark SQL text (for F.expr strings; CLAUDE.md gotcha 18) ----------
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(s: str) -> str:
+    """``s`` as a single-quoted Spark SQL string literal: ``\\`` and
+    ``'`` backslash-escaped (the default parser, where
+    ``spark.sql.parser.escapedStringLiterals`` is false)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _require_identifier(cs: str) -> None:

@@ -10,8 +10,7 @@ index semantics: sorted position = class index,
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from swat_mapreduce_spark.functions.text import sql_ident, sql_string
 
 CLASS_NAMES: list[str] = [
     "aerosol_cans",
@@ -51,16 +50,22 @@ assert NUM_CLASSES == 30
 assert CLASS_NAMES == sorted(CLASS_NAMES)
 
 
-def class_name_at(idx: Column, names: list[str] = CLASS_NAMES) -> Column:
-    """``names[idx]``, with an out-of-range or null index →
-    ``names[0]`` (python/predict_batch_threaded_local.py:159;
-    SURVEY.md §2A #14) — the same rows as a left join on the
-    ``(label_idx, class_name)`` dictionary plus ``coalesce`` to
-    ``names[0]``, but a per-row literal-array lookup: no join and no
-    extra Spark job. The guard keeps ``[idx]`` in range, so it never
-    raises under ANSI mode."""
-    in_range = (idx >= 0) & (idx < len(names))
-    return F.when(in_range, F.lit(names)[idx]).otherwise(F.lit(names[0]))
+def class_name_at(idx: str, names: list[str] = CLASS_NAMES) -> str:
+    """Spark SQL text: ``names[idx]`` for the integer column ``idx`` (a
+    column name), with an out-of-range or null index → ``names[0]``
+    (python/predict_batch_threaded_local.py:159; SURVEY.md §2A #14) —
+    the same rows as a left join on the ``(label_idx, class_name)``
+    dictionary plus ``coalesce`` to ``names[0]``, but a per-row
+    lookup in a literal array: no join and no extra Spark job. The
+    guard keeps ``[idx]`` in range, so it never raises under ANSI mode.
+    Names are escaped string literals, so a custom vocabulary may hold
+    any character. Parse with ``F.expr`` (CLAUDE.md gotcha 18)."""
+    i = sql_ident(idx)
+    arr = ", ".join(sql_string(n) for n in names)
+    return (
+        f"CASE WHEN {i} >= 0 AND {i} < {len(names)} THEN array({arr})[{i}] "
+        f"ELSE {sql_string(names[0])} END"
+    )
 
 
 def labels_values_sql() -> str:

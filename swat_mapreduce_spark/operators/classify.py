@@ -27,11 +27,14 @@ oracle-checkable in DuckDB; the real Arrow-batched inference surface
 Scale notes: scoring and the label lookup are per-row JVM expression
 work (no join, no shuffle, no Python — ceil(30/8) = 4 md5 digests per
 row, labels a literal-array index); the only shuffle in the whole
-plan is the final global sort, which the reference also pays
-(its MR key-sort) — and which a 100 TB run would replace with
-``sortWithinPartitions`` unless a totally-ordered output is demanded.
-Plan construction: the score stage is parsed from SQL strings, one Py4J
-call per column; its Column builders cost ~0.23 s per job (gotcha 18).
+plan is the key sort, which the reference also pays (its MR
+key-sort). The TSV sink sorts an input that fits one advisory
+partition in one reducer, the reference's Hadoop default, and a larger
+one with a global ``orderBy`` (sources/sinks.py, CLAUDE.md gotcha 19);
+a 100 TB run writes unsorted (``--no-sort``) unless a totally-ordered
+output is demanded. Plan construction: every stage is parsed from SQL
+strings, one Py4J call per column or filter; Column builders cost
+~0.23 s per job for the score stage alone (gotcha 18).
 """
 
 from __future__ import annotations
@@ -119,11 +122,10 @@ def clean_manifest(manifest: DataFrame) -> DataFrame:
     """Trim + drop blank + drop ``#``-comment lines → ``image_path``.
 
     SURVEY.md §2A #2,#3. BOM survives (it is not whitespace and the
-    reference never strips it)."""
-    return (
-        manifest.select(F.trim("line").alias("image_path"))
-        .filter(F.length("image_path") > 0)
-        .filter(~F.col("image_path").startswith("#"))
+    reference never strips it). One parsed projection and one parsed
+    filter (CLAUDE.md gotcha 18)."""
+    return manifest.select(F.expr("trim(line) AS image_path")).filter(
+        F.expr("length(image_path) > 0 AND NOT startswith(image_path, '#')")
     )
 
 
@@ -149,15 +151,12 @@ def predict_top1(scored: DataFrame) -> DataFrame:
     """softmax → argmax → error fallback (SURVEY.md §2A #11-13).
 
     decode failure → (class index 0, prob 0.0), matching
-    python/predict_batch_threaded_local.py:100-108."""
+    python/predict_batch_threaded_local.py:100-108. Each column is one
+    parsed ``CASE`` (CLAUDE.md gotcha 18)."""
+    idx = f"CASE WHEN decode_ok THEN {A.argmax('logits')} ELSE 0 END"
+    prob = f"CASE WHEN decode_ok THEN {A.top1_prob('logits')} ELSE 0.0D END"
     return scored.select(
-        "image_path",
-        F.when(F.col("decode_ok"), A.argmax(F.col("logits")))
-        .otherwise(F.lit(0))
-        .alias("pred_idx"),
-        F.when(F.col("decode_ok"), A.top1_prob(F.col("logits")))
-        .otherwise(F.lit(0.0))
-        .alias("prob"),
+        "image_path", F.expr(f"{idx} AS pred_idx"), F.expr(f"{prob} AS prob")
     )
 
 
@@ -176,7 +175,7 @@ def attach_labels(
     names = CLASS_NAMES
     if labels_path is not None:
         names = derive_class_names(labels_path)
-    return preds.withColumn("class", class_name_at(F.col("pred_idx"), names))
+    return preds.withColumn("class", F.expr(class_name_at("pred_idx", names)))
 
 
 def predict(

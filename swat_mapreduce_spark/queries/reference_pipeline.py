@@ -150,9 +150,8 @@ LEFT JOIN {labels_values_sql()} ON g.i = labels.label_idx
 
 @register("label_lookup_guard", oracle=_LABEL_GUARD_ORACLE)
 def label_lookup_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    idx = F.col("id")
     return spark.range(0, 36).select(
-        idx.alias("idx"), class_name_at(idx).alias("class")
+        F.col("id").alias("idx"), F.expr(class_name_at("id")).alias("class")
     )
 
 
@@ -192,8 +191,8 @@ def softmax_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     probs = A.softmax(F.col("logits"))
     return scored.select(
         "image_path",
-        A.argmax(F.col("logits")).alias("pred_idx"),
-        R.r(A.top1_prob(F.col("logits")), 4).alias("top1_prob"),
+        F.expr(A.argmax("logits")).alias("pred_idx"),
+        R.r(F.expr(A.top1_prob("logits")), 4).alias("top1_prob"),
         R.r(A.asum(probs), 4).alias("prob_sum"),
     )
 

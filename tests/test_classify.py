@@ -72,7 +72,7 @@ def test_argmax_first_index_tiebreak(spark):
     from swat_mapreduce_spark.functions import arrays as A
 
     df = spark.createDataFrame([([1.0, 3.0, 3.0, 0.0],)], "arr array<double>")
-    row = df.select(A.argmax(F.col("arr")).alias("i")).first()
+    row = df.select(F.expr(A.argmax("arr")).alias("i")).first()
     assert row.i == 1
 
 
@@ -117,6 +117,19 @@ def test_attach_labels_custom_vocabulary(spark, tmp_path):
     assert got == {0: "cat", 1: "dog", -1: "cat", 2: "cat", 29: "cat", None: "cat"}
 
 
+def test_attach_labels_escapes_quote_and_backslash(spark, tmp_path):
+    """Custom names are Spark SQL string literals in the lookup: a
+    quote, a backslash and a backtick come back verbatim."""
+    names = ["it's", "back\\slash", "a\\'b", "`tick`"]
+    labels = tmp_path / "labels.txt"
+    labels.write_text("\n".join(names) + "\n")
+    preds = spark.createDataFrame([(i,) for i in range(-1, 5)], "pred_idx int")
+    out = classify.attach_labels(preds, spark, labels_path=str(labels))
+    got = {r.pred_idx: r["class"] for r in out.collect()}
+    assert got == {-1: names[0], 0: names[0], 1: names[1], 2: names[2],
+                   3: names[3], 4: names[0]}
+
+
 def test_tsv_sink_reference_format(spark, sf_dir, tmp_path):
     """TextOutputFormat parity: ``path\\tclass,prob`` lines
     (java/PredictDriverCluster.java:39,43)."""
@@ -133,6 +146,59 @@ def test_tsv_sink_reference_format(spark, sf_dir, tmp_path):
         assert cls in CLASS_NAMES
         float(prob)  # %.4f parses
         assert len(prob.split(".")[1]) == 4
+
+
+def _sink_jobs_and_lines(spark, preds, out_dir) -> tuple[int, int, list[str]]:
+    """(Spark jobs, part files, lines in part-file order) of one sorted
+    ``write_predictions_tsv``; jobs are counted under a job group."""
+    import os
+
+    from swat_mapreduce_spark.sources.sinks import write_predictions_tsv
+
+    sc = spark.sparkContext
+    group = f"sink-{os.path.basename(out_dir)}"
+    sc.setJobGroup(group, group)
+    try:
+        write_predictions_tsv(preds, out_dir, sort=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    parts = sorted(n for n in os.listdir(out_dir) if n.startswith("part-"))
+    lines = []
+    for name in parts:
+        with open(os.path.join(out_dir, name), encoding="utf-8") as f:
+            lines += f.read().splitlines()
+    return jobs, len(parts), lines
+
+
+def test_sorted_sink_sorts_small_input_in_one_reducer(spark, tmp_path):
+    """A sort input that fits one advisory partition is sorted in one
+    reducer: no range-bounds sampling job re-running the input plan,
+    so 2 jobs (shuffle map, write) and one part file (CLAUDE.md gotcha
+    19). With a tiny advisory size the same write takes the global
+    ``orderBy`` (3 jobs: sample, shuffle map, write) and writes the
+    same lines in the same global order."""
+    n = 500
+    preds = spark.range(0, n, 1, 4).select(
+        F.format_string("/p/%05d.jpg", (F.col("id") * 7919) % n).alias("image_path"),
+        F.lit("c").alias("class"),
+        (F.col("id") / n).alias("prob"),
+    )
+    jobs, parts, lines = _sink_jobs_and_lines(spark, preds, str(tmp_path / "small"))
+    paths = [ln.split("\t")[0] for ln in lines]
+    assert (jobs, parts) == (2, 1)
+    assert paths == [f"/p/{i:05d}.jpg" for i in range(n)]
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "64b")
+    try:
+        jobs, _, big_lines = _sink_jobs_and_lines(spark, preds, str(tmp_path / "big"))
+    finally:
+        spark.conf.set(key, before)
+    assert jobs == 3
+    assert big_lines == lines
 
 
 def _gateway_commands(spark, build) -> int:
@@ -167,7 +233,9 @@ def _gateway_commands(spark, build) -> int:
 def test_score_plan_builds_in_few_gateway_calls(spark, tmp_path):
     """Plan construction is paid on every job before any task runs
     (CLAUDE.md gotcha 18): the 30-logit array is one parsed expression,
-    not ~2,300 Column-builder round trips."""
+    not ~2,300 Column-builder round trips, and every other stage of
+    ``predict`` is parsed SQL too (546 commands when only the score
+    stage was)."""
     from swat_mapreduce_spark.functions import hashing as H
     from swat_mapreduce_spark.sources.readers import read_manifest
 
@@ -175,7 +243,7 @@ def test_score_plan_builds_in_few_gateway_calls(spark, tmp_path):
     manifest.write_text("/a.jpg\n# c\n/b.jpg\n")
     lines = read_manifest(spark, str(manifest))
     assert _gateway_commands(spark, lambda: H.logits_array("image_path", 30)) <= 10
-    assert _gateway_commands(spark, lambda: classify.predict(lines, spark)) <= 800
+    assert _gateway_commands(spark, lambda: classify.predict(lines, spark)) <= 150
 
 
 def test_score_matches_numpy_scorer_bit_for_bit(spark):

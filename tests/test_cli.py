@@ -27,7 +27,7 @@ def test_cli_manifest_to_tsv(spark, tmp_path):
     assert rc == 0
 
     lines = []
-    for part in glob.glob(f"{out}/part-*"):
+    for part in sorted(glob.glob(f"{out}/part-*")):
         with open(part) as f:
             lines += [ln.rstrip("\n") for ln in f if ln.strip()]
     # 4 surviving rows: BOM line, b.jpg x2 (duplicate preserved), a.jpg
@@ -37,14 +37,15 @@ def test_cli_manifest_to_tsv(spark, tmp_path):
         path, kv = ln.split("\t")
         cls, prob = kv.rsplit(",", 1)
         assert cls and len(prob.split(".")[1]) == 4
-    # duplicates preserved, key-sorted; the file-leading BOM is
-    # stripped by Spark's text source (documented divergence — the
-    # BOM wart is pinned by the synthetic-manifest oracle instead)
-    paths = [ln.split("\t")[0] for ln in sorted(lines)]
+    # duplicates preserved, key-sorted across the part files read in
+    # name order; the file-leading BOM is stripped by Spark's text
+    # source (documented divergence — the BOM wart is pinned by the
+    # synthetic-manifest oracle instead)
+    paths = [ln.split("\t")[0] for ln in lines]
     assert paths.count("/data/img/b.jpg") == 2
     assert "/user/binh/garbage/shoes/shoes_1.jpg" in paths
     assert not any(p.startswith("﻿") for p in paths)
-    assert paths == sorted(paths)
+    assert all(a <= b for a, b in zip(paths, paths[1:]))
 
 
 def test_cli_custom_labels(spark, tmp_path):

@@ -102,6 +102,15 @@ def test_bit_identical_near_tie_is_not_an_offender():
     assert Decimal(rec["min_tie_scaled"]) < NEAR_SCALED
 
 
+def test_signed_zero_is_not_a_bitdiff():
+    """Spark 0.0 against DuckDB -0.0 hashes equal (norm_value folds the
+    sign), so the audit counts no bitdiff and the query is not fragile."""
+    spark_res, duck_res = (["x"], [(0.0,), (-0.0,)]), (["x"], [(-0.0,), (0.0,)])
+    rec = check_oracle(_TIE_Q, spark_res, duck_res)
+    assert rec["float_cells"] == 2
+    assert rec["bitdiff"] == 0 and rec["fragile_samples"] == []
+
+
 def test_count_fragile_casts():
     assert count_fragile_casts("SELECT CAST(a*b AS DECIMAL(18,4)) FROM t") == 1
     assert count_fragile_casts("SELECT CAST(round(x) AS DECIMAL(18,0))") == 0

@@ -253,7 +253,11 @@ def tie_record(name: str, oracle: str, spark_res, duck_res) -> dict:
                 min_tie = d
             if d < NEAR_SCALED:
                 rec["near_ties"] += 1
-            if not isinstance(dv, float) or _float_bits(sv) == _float_bits(dv):
+            if not isinstance(dv, float):
+                continue
+            # + 0.0 folds -0.0 into 0.0, as norm_value does: a signed
+            # zero can never flip the value hash
+            if _float_bits(sv + 0.0) == _float_bits(dv + 0.0):
                 continue
             if math.isnan(sv) and math.isnan(dv):
                 continue
