@@ -4,13 +4,17 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Timing excludes session startup; each query is executed REPEATS times
-(fully materialized via a count-style action) and the per-query number
-is the best run — a warmed steady-state figure. Round-2 analysis
-showed single-shot timings are dominated by first-run plan compile /
-codegen and by session crowding (the same four queries that looked
-1.3-1.9x slower in a 44-query session ran at r1 speed isolated once
-warm — see BASELINE.md), so cold single-shots measured the JIT, not
-the plan.
+as a noop-sink write (``run_query(..., "noop")``), which computes every
+output column the correctness driver checks — not a count-style
+action, whose plan Catalyst prunes of the output projections. Every
+rep starts from a cleared cache and the per-query number is the best
+rep — a warmed steady-state figure. Round-2 analysis showed
+single-shot timings are dominated by first-run plan compile / codegen
+and by session crowding (the same four queries that looked 1.3-1.9x
+slower in a 44-query session ran at r1 speed isolated once warm — see
+BASELINE.md), so cold single-shots measured the JIT, not the plan.
+Captures before the noop harness timed ``count()`` and are not
+comparable with noop ones (BASELINE.md count-vs-noop table).
 """
 
 from __future__ import annotations
@@ -375,18 +379,16 @@ HEADLINE = [
 ]
 
 REPEATS = 2
-# Adaptive extra reps (r8): this box's run-to-run timing variance is
-# +/-25% (BENCH_PINS r8 run_variance evidence), so a best-of-2 can
-# report a noise-inflated number that then trips the cross-round
-# benchdiff gate. When the two readings disagree by >20%, take up to
-# MAX_REPEATS until the best is confirmed by a second reading within
-# 20% — stable queries still pay exactly 2 reps.
-MAX_REPEATS = 4
+# a stream_* rep this slow is not repeated: it bounds run time, and a
+# replay's cost is state-store init + micro-batches, steady from rep 1
+STREAM_CUT_S = 12.0
 
 
 def warm_up(spark, reg, sf_dir: str) -> None:
     """Untimed warm-up shared by bench.py and tools/isolate.py."""
     from pyspark.sql import functions as F
+
+    from swat_mapreduce_spark.queries import run_query
 
     # Warm up the execution machinery on unrelated trivial jobs so
     # per-query timings reflect steady state, not one-time init:
@@ -409,8 +411,24 @@ def warm_up(spark, reg, sf_dir: str) -> None:
     # 0.5-2.5 s of residual session warmup (flagship_classify in
     # r1/r2/r5 — BASELINE.md pins, VERDICT r5 #1). One throwaway run
     # of the first headline query retires that cost before timing.
-    reg[HEADLINE[0]].spark_fn(spark, sf_dir).count()
-    spark.catalog.clearCache()
+    run_query(spark, reg[HEADLINE[0]], sf_dir, "noop")
+
+
+def time_query(
+    spark, q, sf_dir: str, reps: int = REPEATS, stream_cut: float = STREAM_CUT_S
+) -> list[float]:
+    """Wall seconds of each noop run of ``q``, up to ``reps`` runs; a
+    stream_* query stops after a run slower than ``stream_cut``."""
+    from swat_mapreduce_spark.queries import run_query
+
+    times: list[float] = []
+    for _ in range(reps):
+        t0 = time.time()
+        run_query(spark, q, sf_dir, "noop")
+        times.append(round(time.time() - t0, 3))
+        if q.name.startswith("stream_") and times[-1] > stream_cut:
+            break
+    return times
 
 
 def main() -> None:
@@ -427,53 +445,10 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     for name in HEADLINE:
-        q = reg[name]
-        best, n = None, None
-        reps: list[float] = []
-        rep = 0
-        # Adaptive extras apply to streaming rows too (r11): their
-        # state-store/checkpoint IO inflates 2-3.5x on a crowded box
-        # (r10 driver recapture read stream_dedup_within_watermark at
-        # 8.43s vs 2.79s isolated steady — the cold-rep shape), so an
-        # unconfirmed best on a stream_* row is exactly the reading
-        # that trips the cross-round gate. The >12s guard below still
-        # stops very long replays after one rep.
-        while rep < REPEATS or (
-            rep < MAX_REPEATS
-            # best unconfirmed: no second reading within 20% of it
-            and sorted(reps)[1] > 1.2 * sorted(reps)[0]
-        ):
-            rep += 1
-            t0 = time.time()
-            df = q.spark_fn(spark, sf_dir)
-            n = df.count()
-            dt = time.time() - t0
-            reps.append(dt)
-            best = dt if best is None else min(best, dt)
-            # repeats exist to strip first-run plan-compile noise,
-            # which can dominate even multi-second queries (flagship's
-            # cold run is ~2.5x its warm run); only streaming queries
-            # skip the repeat — their cost is state-store init +
-            # micro-batch replay, already steady-state-dominated on
-            # the first run. (Through r5 this was a bare >12 s time
-            # cut, which misclassified ann_ivfpq_topk's 12.03 s cold
-            # run as unrepeatable and reported it cold while its
-            # sibling ann_pq_adc_topk reported the cached-rep time;
-            # sub-12 s streaming rows keep their best-of-2 behavior
-            # unchanged.)
-            if dt > 12.0 and name.startswith("stream_"):
-                break
-        # Drop per-query persist() blocks AFTER the rep loop (not
-        # between reps — Spark's CacheManager matches by logical plan,
-        # so rep 2 legitimately reuses rep 1's warmed blocks, which is
-        # the steady-state r3 methodology). Without this the 92-query
-        # session accumulates dead MEMORY_AND_DISK blocks for the
-        # process lifetime (ADVICE r3).
-        spark.catalog.clearCache()
-        timings[name] = round(best, 3)
+        reps = time_query(spark, reg[name], sf_dir)
+        timings[name] = min(reps)
         print(
-            f"# {name}: {n} rows in {timings[name]:.3f}s "
-            f"(best of {len(reps)})",
+            f"# {name}: {timings[name]:.3f}s (best of {len(reps)})",
             file=sys.stderr,
         )
 

@@ -24,13 +24,42 @@ class QueryEntry:
     oracle: str | None  # DuckDB SQL or None for rows-only check
     # Lazy plan builder for queries whose spark_fn collect()s
     # internally (bounded driver-state patterns): returns the heavy
-    # pre-collect DataFrame WITHOUT executing it, so plan tooling
-    # (query_cli --explain, plans/r12 evidence) can explain the real
+    # pre-collect DataFrame WITHOUT executing it, so run_query's "plan"
+    # mode (query_cli --explain, planaudit) explains the real
     # computation instead of the LocalTableScan of collected rows.
     plan_fn: Callable[[SparkSession, str], DataFrame] | None = None
 
 
 REGISTRY: dict[str, QueryEntry] = {}
+
+
+def run_query(spark: SparkSession, q: QueryEntry, sf_dir: str, mode: str):
+    """Build and run ``q`` at ``sf_dir`` the one way every tool does.
+
+    - ``"collect"``: ``(columns, Rows)`` — what the oracle check hashes.
+    - ``"noop"``: a noop-sink write that computes every output column
+      and returns nothing — what bench times. A ``count()`` would let
+      Catalyst prune the output projections away.
+    - ``"plan"``: the formatted physical plan of ``q.plan_fn`` (or
+      ``q.spark_fn``), unexecuted beyond what the builder runs itself.
+
+    Every mode drops the session's cached relations afterwards, so a
+    query's ``persist()`` blocks neither leak into nor speed up the
+    next run.
+    """
+    if mode not in ("collect", "noop", "plan"):
+        raise ValueError(f"unknown run mode {mode!r}")
+    try:
+        if mode == "plan":
+            from swat_mapreduce_spark.plans.explain import formatted_plan
+
+            return formatted_plan((q.plan_fn or q.spark_fn)(spark, sf_dir))
+        df = q.spark_fn(spark, sf_dir)
+        if mode == "collect":
+            return df.columns, df.collect()
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        spark.catalog.clearCache()
 
 
 def register(

@@ -55,7 +55,7 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
-    from swat_mapreduce_spark.queries import load_all
+    from swat_mapreduce_spark.queries import load_all, run_query
 
     reg = load_all()
     if args.list:
@@ -72,7 +72,6 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession
 
-    from swat_mapreduce_spark.plans.explain import formatted_plan
     from swat_mapreduce_spark.session import get_spark
 
     # a caller's session is used as it stands; engine defaults apply
@@ -80,10 +79,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = SparkSession.getActiveSession() or get_spark("swat-query-cli")
     entry = reg[args.query]
     if args.explain:
-        # a spark_fn that collects internally plans as a LocalTableScan;
-        # its plan_fn is the real computation, unexecuted
-        fn = entry.plan_fn or entry.spark_fn
-        print(formatted_plan(fn(spark, args.sf_dir)))
+        print(run_query(spark, entry, args.sf_dir, "plan"))
         return 0
     df = entry.spark_fn(spark, args.sf_dir)
     if args.format == "show":

@@ -169,6 +169,12 @@ def test_lsh_planes_formula_matches_duck():
 
     for n in [1, 31, 32, 33, 64, 500, 2000, 2048, 10**6, 10**9, 10**12]:
         cte = S.duck_lsh_planes(tbl=f"(SELECT * FROM range({n}))")
+        if n > 10**9:
+            # counting 10**12 rows takes minutes: the same CTE over one
+            # row, its count(*) replaced by the corpus size
+            cte = S.duck_lsh_planes(tbl="(SELECT 1)").replace(
+                "count(*)", f"{n}::BIGINT"
+            )
         p = duckdb.sql(f"WITH {cte} SELECT p FROM np").fetchone()[0]
         assert p == S.lsh_planes_for(n), n
 

@@ -377,6 +377,30 @@ def test_plans_census_covers_full_registry(spark):
     assert not unknown, f"PLANS.md cites unregistered queries: {unknown}"
 
 
+def test_census_reads_plan_fn_plans():
+    """A query with a plan_fn collects inside its spark_fn, which plans
+    as a bare LocalTableScan of the collected rows. Every such query is
+    a multi-stage job, so a census row reading 0 shuffles means the
+    census explained the collected rows, not the plan_fn."""
+    import re
+
+    from swat_mapreduce_spark.queries import load_all
+
+    with_plan_fn = {n for n, q in load_all().items() if q.plan_fn}
+    text = open("PLANS.md").read()
+    header = next(l for l in text.splitlines() if l.startswith("| query |"))
+    cols = [c.strip() for c in header.strip("|").split("|")]
+    idx = cols.index("shuffles")
+    shuffles = {}
+    for line in text.splitlines():
+        m = re.match(r"\| (\w+) \|", line)
+        if m and m.group(1) in with_plan_fn:
+            shuffles[m.group(1)] = line.strip("|").split("|")[idx].strip()
+    assert sorted(shuffles) == sorted(with_plan_fn)
+    flat = {n: s for n, s in shuffles.items() if not (s.isdigit() and int(s))}
+    assert not flat, f"plan_fn queries censused with no shuffle: {flat}"
+
+
 def test_census_has_no_cartesian_products():
     """Registry-wide no-cartesian contract: the pytest guardrail walks
     only the headline set; the census walks EVERY batch query, so its
@@ -620,7 +644,7 @@ def test_census_cross_sf_plan_invariance_sample(spark):
     extra Exchange as data grows fails here before it ships."""
     from tools.planaudit import audit_one
 
-    from swat_mapreduce_spark.queries import load_all
+    from swat_mapreduce_spark.queries import load_all, run_query
 
     reg = load_all()
     sample = [
@@ -636,7 +660,7 @@ def test_census_cross_sf_plan_invariance_sample(spark):
     for name in sample:
         counts = {}
         for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-            counts[sf] = audit_one(name, reg[name].spark_fn(spark, sf))
+            counts[sf] = audit_one(run_query(spark, reg[name], sf, "plan"))
         a, b = counts.values()
         assert a == b, f"{name}: plan reshaped across SFs: {a} vs {b}"
 

@@ -4,19 +4,20 @@ Usage:
     python tools/isolate.py [--sf DIR] [--reps N] query1 query2 ...
 
 Runs the named registry queries in ONE quiet warmed session (the
-BENCH_PINS.json methodology: isolated reps, sf0.1, local[32]) and
-prints every rep plus the warmed best, as JSON on the last line.
-Streaming queries are still repeated — their rep spread IS the
-state-store-init evidence a pin needs.
+BENCH_PINS.json methodology: isolated reps, sf0.1, local[32]), timed
+by bench.py's noop-write loop, and prints every rep plus the warmed
+best, as JSON on the last line. Streaming queries are still repeated,
+however slow — their rep spread IS the state-store-init evidence a pin
+needs.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -28,7 +29,7 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=5)
     args = ap.parse_args()
 
-    from bench import warm_up
+    from bench import time_query, warm_up
     from swat_mapreduce_spark.queries import load_all
     from swat_mapreduce_spark.session import get_spark
 
@@ -41,13 +42,7 @@ def main() -> None:
 
     out: dict[str, dict] = {}
     for name in args.queries:
-        q = reg[name]
-        reps: list[float] = []
-        for _ in range(args.reps):
-            t0 = time.time()
-            q.spark_fn(spark, args.sf).count()
-            reps.append(round(time.time() - t0, 3))
-        spark.catalog.clearCache()
+        reps = time_query(spark, reg[name], args.sf, args.reps, math.inf)
         out[name] = {"reps": reps, "best": min(reps)}
         print(f"# {name}: {reps} -> best {min(reps):.3f}", file=sys.stderr)
     print(json.dumps(out))

@@ -17,7 +17,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-def audit_one(name: str, df) -> dict:
+def audit_one(plan: str) -> dict:
     """Counts of scale-relevant node kinds in the FINAL (adaptive)
     plan section. The formatted explain of an unexecuted AQE plan
     repeats everything under '== Initial Plan ==' — only the first
@@ -27,9 +27,7 @@ def audit_one(name: str, df) -> dict:
     '+- == Initial Plan ==' markers INDENTED inside the tree — a bare
     substring split cut the text there, before any detail block, and
     censused those queries as all-zero."""
-    from swat_mapreduce_spark.plans.explain import formatted_plan
-
-    plan = re.split(r"(?m)^== Initial Plan ==", formatted_plan(df))[0]
+    plan = re.split(r"(?m)^== Initial Plan ==", plan)[0]
     # numbered tree nodes: "(12) NodeName [codegen id : 3]"
     nodes = re.findall(r"\(\d+\)\s+([A-Za-z]+)", plan)
     # Exchange kind lives in its Arguments detail line (detail blocks
@@ -390,44 +388,35 @@ def main() -> None:
     )
     out_md = sys.argv[2] if len(sys.argv) > 2 else "PLANS.md"
 
-    from swat_mapreduce_spark.queries import load_all
+    from swat_mapreduce_spark.queries import load_all, run_query
     from swat_mapreduce_spark.session import get_spark
 
     spark = get_spark("planaudit")
     spark.sparkContext.setLogLevel("ERROR")
     reg = load_all()
 
-    from swat_mapreduce_spark.plans.explain import formatted_plan
-
     rows = []
     skipped = []
     for name in sorted(reg):
-        fn = reg[name].spark_fn
+        # streaming queries execute on construction (availableNow);
+        # their batch plans are covered by their batch-agg twins
+        if name.startswith("stream_"):
+            skipped.append(name)
+            continue
         try:
-            # streaming queries execute on construction (availableNow);
-            # their batch plans are covered by their batch-agg twins
-            if name.startswith("stream_"):
-                skipped.append(name)
-                continue
-            df = fn(spark, sf_dir)
-            counts = audit_one(name, df)
+            counts = audit_one(run_query(spark, reg[name], sf_dir, "plan"))
             # second pass under threshold=-1: only hint-FORCED
             # broadcasts survive; prove each one's input bounded
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
             try:
-                df2 = fn(spark, sf_dir)
-                plan2 = formatted_plan(df2).split("== Initial Plan ==")[0]
-                hinted, bounded, unproven = audit_broadcast_boundedness(
-                    plan2
-                )
-                counts["hint_bcast"] = hinted
-                counts["corpus_bcast"] = len(unproven)
+                plan2 = run_query(spark, reg[name], sf_dir, "plan")
             finally:
                 spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-                # cached relations left by a query's persist() would
-                # substitute into LATER queries' plans (plan census
-                # order-dependence) — audit each query self-contained
-                spark.catalog.clearCache()
+            hinted, bounded, unproven = audit_broadcast_boundedness(
+                plan2.split("== Initial Plan ==")[0]
+            )
+            counts["hint_bcast"] = hinted
+            counts["corpus_bcast"] = len(unproven)
             rows.append((name, counts))
         except Exception as e:  # noqa: BLE001
             rows.append((name, {"error": str(e)[:80]}))
@@ -449,6 +438,11 @@ def main() -> None:
         "",
         "Streaming queries are omitted (they execute on construction;",
         "their aggregation plans mirror the batch twins).",
+        "",
+        "A query whose `spark_fn` collects internally registers a",
+        "`plan_fn`, the lazy pre-collect plan builder: it is censused on",
+        "that plan (`run_query`'s \"plan\" mode), not on the",
+        "LocalTableScan of its collected rows, and is not executed.",
         "",
         "Cross-SF stability (verified round 5 for the then-314 queries;",
         "RE-VERIFIED round 7 for the full 345-row registry including all",

@@ -129,17 +129,6 @@ def duck_con(sf_dir: str):
     return con
 
 
-def spark_result(spark, q, sf_dir: str) -> tuple[list[str], list]:
-    """Build and collect ``q``'s Spark side: ``(columns, Rows)``."""
-    try:
-        sdf = q.spark_fn(spark, sf_dir)
-        return sdf.columns, sdf.collect()
-    finally:
-        # per-query persist() blocks (LSH/minhash/charlm) would
-        # otherwise accumulate for the session lifetime
-        spark.catalog.clearCache()
-
-
 def duck_result(con, sql: str) -> tuple[list[str], list[tuple]]:
     """Run an oracle: ``(columns, rows)``. Fetched via Arrow, NOT
     fetchall(): duckdb's fetchall folds HUGEINT into plain int, masking
@@ -172,7 +161,9 @@ def assert_matches_oracle(spark, q, sf_dir: str, con=None) -> list:
     """Oracle check: sorted column names, row count and value
     hash of ``q`` equal its oracle's over the same parquet. Returns the
     Spark Rows so callers can pin extra semantics on them."""
-    spark_res = spark_result(spark, q, sf_dir)
+    from swat_mapreduce_spark.queries import run_query
+
+    spark_res = run_query(spark, q, sf_dir, "collect")
     check_rows(q.name, spark_res, duck_result(con or duck_con(sf_dir), q.oracle))
     return spark_res[1]
 
@@ -301,7 +292,7 @@ def check_oracle(q, spark_res, duck_res) -> dict:
 
 
 def run(sf_dir: str, only: list[str] | None = None) -> int:
-    from swat_mapreduce_spark.queries import load_all
+    from swat_mapreduce_spark.queries import load_all, run_query
     from swat_mapreduce_spark.session import get_spark
 
     spark = get_spark("selfcheck", shuffle_partitions=8)
@@ -314,7 +305,7 @@ def run(sf_dir: str, only: list[str] | None = None) -> int:
         t0 = time.time()
         tie = ""
         try:
-            spark_res = spark_result(spark, q, sf_dir)
+            spark_res = run_query(spark, q, sf_dir, "collect")
             tag = "rows  "
             if q.oracle is not None:
                 rec = check_oracle(q, spark_res, duck_result(con, q.oracle))
