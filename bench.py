@@ -11,10 +11,16 @@ rep starts from a cleared cache and the per-query number is the best
 rep — a warmed steady-state figure. Round-2 analysis showed
 single-shot timings are dominated by first-run plan compile / codegen
 and by session crowding (the same four queries that looked 1.3-1.9x
-slower in a 44-query session ran at r1 speed isolated once warm — see
+slower in a 44-query session ran at r1 speed alone once warm — see
 BASELINE.md), so cold single-shots measured the JIT, not the plan.
 Captures before the noop harness timed ``count()`` and are not
 comparable with noop ones (BASELINE.md count-vs-noop table).
+
+The capture (BENCH_full.json) also records each query's work — Spark
+jobs, stages, tasks, input/shuffle/spill bytes and executor CPU, read
+from the status store — and gates it against BENCH_BASE.json
+(tools/benchdiff.py). Wall time is the reported headline, not what the
+gate judges: it moves with the machine's load, the work does not.
 """
 
 from __future__ import annotations
@@ -25,6 +31,10 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from py4j.protocol import Py4JJavaError  # noqa: E402
+
+from perfbench.tracing import SparkStatus  # noqa: E402
 
 HEADLINE = [
     "flagship_classify",
@@ -385,7 +395,7 @@ STREAM_CUT_S = 12.0
 
 
 def warm_up(spark, reg, sf_dir: str) -> None:
-    """Untimed warm-up shared by bench.py and tools/isolate.py."""
+    """Untimed warm-up before the first timed query."""
     from pyspark.sql import functions as F
 
     from swat_mapreduce_spark.queries import run_query
@@ -409,32 +419,58 @@ def warm_up(spark, reg, sf_dir: str) -> None:
     # above don't touch the parquet scan path / committer / larger
     # codegen shapes, so the first timed query historically absorbed
     # 0.5-2.5 s of residual session warmup (flagship_classify in
-    # r1/r2/r5 — BASELINE.md pins, VERDICT r5 #1). One throwaway run
-    # of the first headline query retires that cost before timing.
+    # r1/r2/r5, VERDICT r5 #1). One throwaway run of the first
+    # headline query retires that cost before timing.
     run_query(spark, reg[HEADLINE[0]], sf_dir, "noop")
 
 
-def time_query(
-    spark, q, sf_dir: str, reps: int = REPEATS, stream_cut: float = STREAM_CUT_S
-) -> list[float]:
-    """Wall seconds of each noop run of ``q``, up to ``reps`` runs; a
-    stream_* query stops after a run slower than ``stream_cut``."""
-    from swat_mapreduce_spark.queries import run_query
+class _Status(SparkStatus):
+    """``SparkStatus`` for a long session. Past ``spark.ui.retainedStages``
+    the status store evicts skipped stages first (they have no completion
+    time), so a job can list a stage the store no longer holds; a skipped
+    stage counts for nothing either way."""
 
+    def _add_stage(self, sid: int, out: dict[str, float]) -> None:
+        try:
+            super()._add_stage(sid, out)
+        except Py4JJavaError as e:
+            name = e.java_exception.getClass().getName()
+            if name != "java.util.NoSuchElementException":
+                raise
+
+
+def time_query(spark, q, sf_dir: str) -> tuple[list[float], dict]:
+    """Wall seconds of each noop run of ``q`` (``REPEATS`` runs; a
+    stream_* query stops after a run slower than ``STREAM_CUT_S``) and
+    the work they did. Each run is job group ``<query>#<rep>``, whose
+    totals are read from Spark's status store after its timed window.
+    Jobs, stages, tasks and bytes are rep 1's, which always runs;
+    ``cpu_s`` is the least executor CPU of any rep, like wall."""
+    from swat_mapreduce_spark.queries import run_query
+    from tools.benchdiff import BYTES, COUNTS
+
+    status = _Status(spark)
     times: list[float] = []
-    for _ in range(reps):
-        t0 = time.time()
-        run_query(spark, q, sf_dir, "noop")
-        times.append(round(time.time() - t0, 3))
-        if q.name.startswith("stream_") and times[-1] > stream_cut:
+    totals: list[dict] = []
+    for rep in range(1, REPEATS + 1):
+        group = f"{q.name}#{rep}"
+        with status.group(group):
+            t0 = time.time()
+            run_query(spark, q, sf_dir, "noop")
+            times.append(round(time.time() - t0, 3))
+        totals.append(status.totals(group))
+        if q.name.startswith("stream_") and times[-1] > STREAM_CUT_S:
             break
-    return times
+    work = {k: int(totals[0][k]) for k in COUNTS + BYTES}
+    work["cpu_s"] = round(min(t["cpu_s"] for t in totals), 3)
+    return times, work
 
 
 def main() -> None:
     from swat_mapreduce_spark.queries import load_all
     from swat_mapreduce_spark.sources.readers import DEFAULT_SF_DIR
     from swat_mapreduce_spark.session import get_spark
+    from tools.benchdiff import report
 
     sf_dir = DEFAULT_SF_DIR
     spark = get_spark("bench")
@@ -444,8 +480,9 @@ def main() -> None:
     warm_up(spark, reg, sf_dir)
 
     timings: dict[str, float] = {}
+    work: dict[str, dict] = {}
     for name in HEADLINE:
-        reps = time_query(spark, reg[name], sf_dir)
+        reps, work[name] = time_query(spark, reg[name], sf_dir)
         timings[name] = min(reps)
         print(
             f"# {name}: {timings[name]:.3f}s (best of {len(reps)})",
@@ -497,80 +534,32 @@ def main() -> None:
     # buffer can always capture and parse it (r3's 92-query line
     # outgrew the buffer → BENCH_r03 recorded parsed: null).
     here = os.path.dirname(os.path.abspath(__file__))
+    doc = {
+        "metric": "headline_queries_total",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "work": work,
+        "duckdb": duck_timings,
+        "duckdb_total": duck_total,
+        "spark_total_on_duckdb_common": spark_on_common,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "sf": sf_val,
+    }
 
-    # Standing cross-round gate (VERDICT r7 #1): adjudicate THIS
-    # capture against the previous round's committed FINAL capture
-    # (BENCH_BASE.json — refreshed to the final BENCH_full.json at
-    # every round end, release checklist in CLAUDE.md). Hop-by-hop
-    # diffs let sub-threshold drift compound (r6->r7 was 1.17x while
-    # every intermediate hop stayed under 1.3x); diffing final-vs-
-    # final makes the compound visible every run.
-    gate: dict = {}
-    sys.path.insert(0, os.path.join(here, "tools"))
-    from benchdiff import source_sha
-
-    sha = source_sha(here)
+    # Standing cross-round gate (VERDICT r7 #1): this capture's work
+    # against the previous round's final capture (BENCH_BASE.json,
+    # promoted at every round end, release checklist in CLAUDE.md).
+    # Diffing final-vs-final keeps small per-round drift from
+    # compounding unseen.
     base_path = os.path.join(here, "BENCH_BASE.json")
     if os.path.exists(base_path):
-        try:
-            from benchdiff import classify, _load_doc, _load_queries
+        with open(base_path) as f:
+            base = json.load(f)
+        doc["gate"] = {"base": "BENCH_BASE.json", **report(base, doc, sys.stderr)[1]}
 
-            with open(os.path.join(here, "BENCH_PINS.json")) as f:
-                pins_doc = json.load(f)
-            old = _load_queries(base_path)
-            # Drift normalization only against a same-source base
-            # (ADVICE r10 #1): a recapture of identical engine source
-            # that runs capture-wide hot is box drift; a cross-source
-            # capture's movers must be explained by the commits.
-            base_sha = _load_doc(base_path).get("source_sha")
-            movers = classify(
-                old, timings, pins_doc, allow_drift=(base_sha == sha)
-            )
-            common = set(old) & set(timings)
-            so = sum(old[q] for q in common)
-            sn = sum(timings[q] for q in common)
-            unexplained = [m for m in movers if m["class"] == "UNEXPLAINED"]
-            for m in movers:
-                flag = "!!" if m["class"] == "UNEXPLAINED" else "ok"
-                print(
-                    f"# gate {flag} {m['query']}: {m['old_sec']} -> "
-                    f"{m['new_sec']} ({m['ratio']}x) [{m['class']}]",
-                    file=sys.stderr,
-                )
-            gate = {
-                "base": "BENCH_BASE.json",
-                "common_ratio": round(sn / so, 3) if so else None,
-                "movers": len(movers),
-                "unexplained": len(unexplained),
-                "unexplained_queries": [m["query"] for m in unexplained],
-            }
-            print(
-                f"# gate vs previous-round final: {len(common)} common, "
-                f"ratio {gate['common_ratio']}x, {len(movers)} movers, "
-                f"{len(unexplained)} UNEXPLAINED",
-                file=sys.stderr,
-            )
-        except Exception as e:  # noqa: BLE001
-            gate = {"base": "BENCH_BASE.json", "error": str(e)[:200]}
-            print(f"# gate skipped: {str(e)[:200]}", file=sys.stderr)
-
-    detail_path = os.path.join(here, "BENCH_full.json")
-    with open(detail_path, "w") as f:
-        json.dump(
-            {
-                "metric": "headline_queries_total",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "duckdb": duck_timings,
-                "duckdb_total": duck_total,
-                "spark_total_on_duckdb_common": spark_on_common,
-                "gate": gate,
-                "source_sha": sha,
-                "sf": sf_val,
-            },
-            f,
-        )
+    with open(os.path.join(here, "BENCH_full.json"), "w") as f:
+        json.dump(doc, f)
     top10 = dict(
         sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10]
     )
@@ -583,14 +572,13 @@ def main() -> None:
         "duckdb_total": duck_total,
         "spark_total_on_duckdb_common": spark_on_common,
         "detail": "BENCH_full.json",
-        "source_sha": sha,
         "sf": sf_val,
     }
-    if gate:
+    if "gate" in doc:
         line["gate"] = {
-            k: gate[k]
-            for k in ("common_ratio", "movers", "unexplained")
-            if k in gate
+            k: doc["gate"][k]
+            for k in ("common_ratio", "regressions", "refused")
+            if k in doc["gate"]
         }
     print(json.dumps(line))
 

@@ -351,24 +351,31 @@ def _take_lock(base: str) -> bool:
     return False
 
 
-def _publish_archive(proc, rec: _Recording) -> None:
-    """atexit hook of the recording process. Stop the context, close the
-    gateway's stdin and wait while the JVM dumps, so no JVM outlives this
-    process. Publish the dump as ``<key>.jsa`` with one rename only when
-    the JVM exited 0 and a JVM maps the dump cleanly: no session ever
-    maps a file still being written. Other keys' archives are deleted."""
+def _stop_jvm(proc) -> int:
+    """Stop the active context, close the gateway's stdin and wait for
+    the driver JVM ``proc`` to exit; return its exit code. A recording
+    JVM dumps its archive while it exits, so it is killed only after
+    ``_DUMP_TIMEOUT_S``."""
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        with contextlib.suppress(Exception):
+            sc.stop()
+    proc.stdin.close()
     try:
-        sc = SparkContext._active_spark_context
-        if sc is not None:
-            with contextlib.suppress(Exception):
-                sc.stop()
-        proc.stdin.close()
-        try:
-            rc = proc.wait(timeout=_DUMP_TIMEOUT_S)
-        except subprocess.TimeoutExpired:
-            proc.kill()
-            rc = proc.wait()
-        if rc == 0 and _archive_maps(rec.java, rec.tmp):
+        return proc.wait(timeout=_DUMP_TIMEOUT_S)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        return proc.wait()
+
+
+def _publish_archive(proc, rec: _Recording) -> None:
+    """atexit hook of the recording process. Stop the JVM and wait while
+    it dumps (``_stop_jvm``), so no JVM outlives this process. Publish
+    the dump as ``<key>.jsa`` with one rename only when the JVM exited 0
+    and a JVM maps the dump cleanly: no session ever maps a file still
+    being written. Other keys' archives are deleted."""
+    try:
+        if _stop_jvm(proc) == 0 and _archive_maps(rec.java, rec.tmp):
             os.replace(rec.tmp, rec.jsa)
             old = glob.glob(os.path.join(os.path.dirname(rec.jsa), "*.jsa"))
             _remove(*(p for p in old if p != rec.jsa))

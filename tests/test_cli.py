@@ -135,3 +135,44 @@ def test_query_cli_explain_prints_plan_fn(spark, capsys):
     assert "Scan parquet" not in formatted_plan(q.spark_fn(spark, sf_dir))
     assert main([q.name, "--sf-dir", sf_dir, "--explain"]) == 0
     assert "Scan parquet" in capsys.readouterr().out
+
+
+def _marked_java_pids(marker: str) -> list[int]:
+    import os
+
+    pids = []
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/comm") as f:
+                if f.read().strip() != "java":
+                    continue
+            with open(f"/proc/{pid}/environ", "rb") as f:
+                if marker.encode() in f.read().split(b"\0"):
+                    pids.append(int(pid))
+        except OSError:
+            continue
+    return pids
+
+
+def test_module_cli_leaves_no_jvm(tmp_path):
+    """`python -m swat_mapreduce_spark` waits for its driver JVM to exit:
+    once the command returns, no java process it started is left."""
+    import os
+    import subprocess
+    import sys
+
+    manifest = tmp_path / "m.txt"
+    manifest.write_text("/x/one.jpg\n/x/two.jpg\n")
+    marker = f"SWAT_CLI_TEST_MARKER={tmp_path}"
+    env = dict(os.environ, SWAT_CLI_TEST_MARKER=str(tmp_path))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # output to a file, not a pipe: a pipe stays open while the JVM,
+    # which inherits it, lives, and reading it to EOF would wait for it
+    log = tmp_path / "log"
+    with open(log, "w") as f:
+        rc = subprocess.run(
+            [sys.executable, "-m", "swat_mapreduce_spark", str(manifest), str(tmp_path / "out")],
+            cwd=repo, env=env, stdout=f, stderr=f, timeout=300,
+        ).returncode
+    assert rc == 0, log.read_text()[-3000:]
+    assert _marked_java_pids(marker) == []

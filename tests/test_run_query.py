@@ -1,6 +1,5 @@
 """The shared query runner (``queries.run_query``): the one way bench,
-isolate, selfcheck, planaudit and query_cli build and run a registry
-query."""
+selfcheck, planaudit and query_cli build and run a registry query."""
 
 from __future__ import annotations
 
@@ -75,3 +74,27 @@ def test_unknown_mode_is_rejected(spark, sf_dir):
 
     with pytest.raises(ValueError, match="count"):
         run_query(spark, _entry("never_built", spark_fn), sf_dir, "count")
+
+
+def test_work_counts_repeat_exactly(spark, sf_dir):
+    """The premise of bench's work gate (tools/benchdiff.py): recording a
+    query's work twice in one session gives the same jobs, stages and
+    tasks. One query each with a broadcast join, a shuffle and a Python
+    stage."""
+    import dataclasses
+
+    from bench import time_query
+    from swat_mapreduce_spark.queries import load_all
+
+    reg = load_all()
+    for name in ("q3_shipping_priority", "q1_pricing_summary", "arrow_scalar_udf"):
+        q = reg[name]
+        # job groups are named after the query: the second recording
+        # runs the same query under a name of its own
+        runs = [
+            time_query(spark, dataclasses.replace(q, name=f"{name}@{i}"), sf_dir)[1]
+            for i in (1, 2)
+        ]
+        counts = [{k: w[k] for k in ("jobs", "stages", "tasks")} for w in runs]
+        assert counts[0] == counts[1], (name, counts)
+        assert counts[0]["jobs"] > 0, name

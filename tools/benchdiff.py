@@ -1,291 +1,121 @@
-"""Mechanically adjudicate two bench captures (VERDICT r5 #1).
+"""Gate one bench capture against another on each query's work.
 
-Compares the per-query timings of two BENCH_full-style JSON captures
-(``{"queries": {name: sec, ...}, ...}`` — the file bench.py writes, or
-a driver BENCH_r*.json's ``parsed`` object) and classifies every mover
-whose new reading exceeds ``ratio_threshold`` x the old reading:
+A capture (the ``BENCH_full.json`` that bench.py writes) records, per
+headline query, the work its noop run did: Spark jobs, stages and
+tasks, input / shuffle-write / spill bytes, and executor CPU seconds.
+Counts and bytes follow from the plan and the data, so two captures of
+the same tree agree on them (bytes to a fraction of a percent); wall
+time does not, and is only reported (the common wall ratio). A query
+regresses when, against the base capture:
 
-- ``subsecond-jitter``   — both readings under ``jitter_floor_sec``;
-  sub-second deltas on local[32] are scheduler/GC noise, not plans.
-- ``pinned-noise:<kind>`` — the query is pinned in BENCH_PINS.json and
-  the new reading is still under its measured ``noise_ceiling_sec``
-  (the band session crowding produces WITHOUT code changes; each pin
-  carries its isolation-run evidence).
-- ``box-drift``          — the capture as a whole runs hot (P75 of the
-  per-query ratio distribution exceeds ``drift_p75_trigger``, e.g. the
-  driver box re-capturing the SAME commit at 1.07x with a 1.45x P90 —
-  VERDICT r9 #2) and this mover's ratio is within ``ratio_threshold``
-  of the capture's own P90 noise band. A genuine single-query
-  regression is an OUTLIER against the capture's distribution, not a
-  participant in it; pinned queries are exempt from this normalization
-  and always face their absolute ceilings.
-- ``UNEXPLAINED``        — everything else: needs a commit explaining
-  it or a new isolation measurement extending BENCH_PINS.json.
+- its ``jobs``, ``stages`` or ``tasks`` grow at all;
+- its ``input_bytes``, ``shuffle_write_bytes`` or ``spill_bytes`` grow
+  by more than ``BYTES_TOL``;
+- its ``cpu_s`` exceeds ``CPU_RATIO`` x a base of at least
+  ``CPU_FLOOR_S`` (a per-row expression blow-up leaves the plan
+  counts as they were).
 
-Exit code 0 iff no UNEXPLAINED mover. Usage:
+The mirrored changes are listed as improvements. Queries present in
+only one capture are listed, not judged. Captures taken with different
+``cpus`` (task counts follow the cores) or ``sf``, or carrying no
+``work``, cannot be compared and are refused.
 
-    python tools/benchdiff.py OLD.json NEW.json [--pins BENCH_PINS.json]
-    python tools/benchdiff.py OLD.json NEW.json --update-gate
+    python tools/benchdiff.py OLD.json NEW.json
 
-``--update-gate`` additionally REWRITES NEW.json's embedded ``gate``
-field with this adjudication, so a capture promoted to BENCH_BASE
-after pin updates carries a gate consistent with the pins that ship
-(VERDICT r9 #3: the committed r9 base said ``unexplained: 2`` because
-its gate was computed before the same commit's pin updates).
-
-Two-capture protocol (VERDICT r12 #2 — a gate that pinned 40/40 movers
-as box heat is not a gate): the round-final number is the PER-QUERY
-MIN over two bench.py captures taken in separate cool windows, merged
-with
-
-    python tools/benchdiff.py --merge-min A.json B.json OUT.json
-
-(same-source_sha captures only). The min across independent captures
-strips one-sided box-heat inflation without touching any timing — a
-query's true cost is a lower envelope; heat only ever adds. The merged
-capture is what gets gated against BENCH_BASE and promoted. Pin budget:
-a round may add at most ~10 FRESH isolation pins on the merged capture;
-needing more means the capture windows were not cool — take a third
-capture instead of pinning wider.
+Exit 0 when no query regressed, 1 when one did, 2 when refused.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
-import os
 import sys
 
-_HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+COUNTS = ("jobs", "stages", "tasks")
+BYTES = ("input_bytes", "shuffle_write_bytes", "spill_bytes")
+BYTES_TOL = 0.01
+CPU_RATIO = 2.0
+CPU_FLOOR_S = 1.0
 
 
-def source_sha(root: str = _HERE) -> str:
-    """Content hash of the engine source (swat_mapreduce_spark/**/*.py
-    + bench.py). Captures stamped with equal hashes were produced by
-    byte-identical query code regardless of commit bookkeeping — the
-    precondition for box-drift normalization (ADVICE r10 #1): a
-    same-source recapture that runs capture-wide hot is box drift by
-    construction, while a cross-source capture's movers must be
-    explained by the commits that changed the source."""
-    h = hashlib.sha256()
-    paths = [os.path.join(root, "bench.py")]
-    for dirpath, dirnames, filenames in os.walk(
-        os.path.join(root, "swat_mapreduce_spark")
-    ):
-        dirnames[:] = [d for d in dirnames if d != "__pycache__"]
-        paths.extend(
-            os.path.join(dirpath, f) for f in filenames if f.endswith(".py")
-        )
-    for p in sorted(paths):
-        if not os.path.exists(p):
-            continue
-        h.update(os.path.relpath(p, root).encode())
-        with open(p, "rb") as f:
-            h.update(f.read())
-    return h.hexdigest()[:16]
+class Refused(Exception):
+    """The two captures cannot be compared."""
 
 
-def _load_doc(path: str) -> dict:
-    with open(path) as f:
-        d = json.load(f)
-    # driver BENCH_r*.json wraps the bench line under "parsed"
-    if "queries" not in d and isinstance(d.get("parsed"), dict):
-        d = d["parsed"]
-    return d
+def _direction(metric: str, old: float, new: float) -> int:
+    """+1 for a regression of ``metric`` from ``old`` to ``new``, -1 for
+    the mirrored improvement, 0 for neither."""
+    if metric in COUNTS:
+        return (new > old) - (new < old)
+    if metric in BYTES:
+        return (new > old * (1 + BYTES_TOL)) - (old > new * (1 + BYTES_TOL))
+    if old < CPU_FLOOR_S:
+        return 0
+    return (new > CPU_RATIO * old) - (old > CPU_RATIO * new)
 
 
-def _load_queries(path: str) -> dict[str, float]:
-    q = _load_doc(path).get("queries")
-    if not isinstance(q, dict) or not q:
-        raise SystemExit(f"{path}: no per-query timings found")
-    return {k: float(v) for k, v in q.items()}
-
-
-def classify(
-    old: dict[str, float],
-    new: dict[str, float],
-    pins_doc: dict,
-    allow_drift: bool = True,
-) -> list[dict]:
-    """Return one record per >threshold mover on the common query set.
-
-    ``allow_drift=False`` disables box-drift normalization entirely
-    (ADVICE r10 #1): callers set it when the two captures were NOT
-    produced by identical engine source, so a capture-wide slowdown
-    cannot be assumed to be the box — it could be a shared-helper
-    regression that would otherwise self-normalize against its own
-    P90."""
-    thr = float(pins_doc.get("ratio_threshold", 1.3))
-    floor = float(pins_doc.get("jitter_floor_sec", 1.0))
-    trigger = float(pins_doc.get("drift_p75_trigger", 1.15))
-    pins = pins_doc.get("pins", {})
-    # capture-level drift estimate: when the whole capture runs hot
-    # (P75 of per-query ratios above the trigger), the P90 ratio is the
-    # band this box produces WITHOUT code change; capped at 2.0 so a
-    # catastrophically noisy capture can't normalize away everything.
-    ratios = sorted(
-        new[q] / old[q] for q in set(old) & set(new) if old[q] > 0
-    )
-    drift = 1.0
-    # a drift distribution needs a population: with few common queries
-    # the P75/P90 are dominated by the movers themselves and a lone
-    # genuine regression would self-normalize away.
-    if allow_drift and len(ratios) >= 20:
-        p75 = ratios[min(len(ratios) - 1, int(len(ratios) * 0.75))]
-        p90 = ratios[min(len(ratios) - 1, int(len(ratios) * 0.90))]
-        if p75 > trigger:
-            drift = min(max(p90, 1.0), 2.0)
-    out = []
-    for name in sorted(set(old) & set(new)):
-        a, b = old[name], new[name]
-        if a <= 0 or b <= thr * a:
-            continue
-        rec = {"query": name, "old_sec": a, "new_sec": b,
-               "ratio": round(b / a, 2)}
-        pin = pins.get(name)
-        if max(a, b) < floor:
-            rec["class"] = "subsecond-jitter"
-            rec["why"] = (
-                f"both readings < {floor}s jitter floor; "
-                f"delta {b - a:+.2f}s is scheduler noise"
-            )
-        elif pin is not None and b <= float(pin["noise_ceiling_sec"]):
-            rec["class"] = f"pinned-noise:{pin.get('kind', 'pinned')}"
-            rec["why"] = (
-                f"<= pinned noise ceiling {pin['noise_ceiling_sec']}s "
-                f"(steady {pin['steady_sec']}s); {pin.get('evidence', '')}"
-            )
-        elif pin is None and drift > 1.0 and b <= thr * a * drift:
-            rec["class"] = "box-drift"
-            rec["why"] = (
-                f"capture runs hot (P90 ratio {drift:.2f}x with no code "
-                f"delta implied); normalized ratio "
-                f"{b / a / drift:.2f} <= {thr} threshold"
-            )
-        else:
-            rec["class"] = "UNEXPLAINED"
-            rec["why"] = (
-                "exceeds pinned ceiling" if pin is not None
-                else "no pin and above jitter floor"
-                + (f" and {thr}x the capture P90 drift band"
-                   if drift > 1.0 else "")
-            ) + " - needs a commit explanation or a new isolation pin"
-        out.append(rec)
+def gate(old: dict, new: dict) -> dict:
+    """Judge capture ``new`` against base ``old`` (both as bench.py
+    writes them); raise ``Refused`` when they cannot be compared."""
+    for doc, side in ((old, "base"), (new, "new")):
+        if not doc.get("work"):
+            raise Refused(f"{side} capture records no per-query work")
+    for key in ("cpus", "sf"):
+        if old.get(key) != new.get(key):
+            raise Refused(f"{key} differs: {old.get(key)} vs {new.get(key)}")
+    ow, nw = old["work"], new["work"]
+    out: dict = {"regressions": [], "improvements": []}
+    for q in sorted(set(ow) & set(nw)):
+        for metric in COUNTS + BYTES + ("cpu_s",):
+            a, b = ow[q][metric], nw[q][metric]
+            d = _direction(metric, a, b)
+            if d:
+                rec = {"query": q, "metric": metric, "old": a, "new": b}
+                out["regressions" if d > 0 else "improvements"].append(rec)
+    out["only_base"] = sorted(set(ow) - set(nw))
+    out["only_new"] = sorted(set(nw) - set(ow))
+    common = set(old.get("queries", {})) & set(new.get("queries", {}))
+    so = sum(old["queries"][q] for q in common)
+    sn = sum(new["queries"][q] for q in common)
+    out["common"] = len(common)
+    out["common_ratio"] = round(sn / so, 3) if so else None
     return out
 
 
-def merge_min(path_a: str, path_b: str, out_path: str) -> int:
-    """Write per-query min of two same-source captures to ``out_path``.
-
-    The merged doc inherits capture A's shape (duckdb timings, sf,
-    source_sha) with ``queries`` replaced by the per-query min over
-    the common set and ``value`` recomputed; queries present in only
-    one capture keep that capture's reading (a query added mid-round
-    appears once). Refuses cross-source merges: a min over different
-    code is not a measurement of either."""
-    doc_a, doc_b = _load_doc(path_a), _load_doc(path_b)
-    qa, qb = _load_queries(path_a), _load_queries(path_b)
-    sha_a, sha_b = doc_a.get("source_sha"), doc_b.get("source_sha")
-    if sha_a != sha_b:
-        print(
-            f"refusing merge: source_sha differs "
-            f"({sha_a or 'unstamped'} vs {sha_b or 'unstamped'})"
-        )
-        return 2
-    merged = {
-        q: min(qa.get(q, float("inf")), qb.get(q, float("inf")))
-        for q in set(qa) | set(qb)
+def report(old: dict, new: dict, out=sys.stdout) -> tuple[int, dict]:
+    """Print the gate of ``new`` against ``old`` to ``out``; return the
+    exit code and a summary fit to embed in a capture."""
+    try:
+        g = gate(old, new)
+    except Refused as e:
+        print(f"refused: {e}", file=out)
+        return 2, {"refused": str(e)}
+    for kind in ("regressions", "improvements"):
+        for r in g[kind]:
+            flag = "!!" if kind == "regressions" else "ok"
+            print(f"{flag} {r['query']:35s} {r['metric']:20s} "
+                  f"{r['old']} -> {r['new']}", file=out)
+    for side in ("only_base", "only_new"):
+        if g[side]:
+            print(f"{side}: {' '.join(g[side])}", file=out)
+    print(f"{g['common']} common queries, wall ratio {g['common_ratio']}x; "
+          f"{len(g['improvements'])} improvements, "
+          f"{len(g['regressions'])} regressions", file=out)
+    return (1 if g["regressions"] else 0), {
+        "common_ratio": g["common_ratio"],
+        "regressions": len(g["regressions"]),
+        "regressed_queries": sorted({r["query"] for r in g["regressions"]}),
     }
-    out = dict(doc_a)
-    out["queries"] = {q: merged[q] for q in sorted(merged)}
-    out["value"] = round(sum(merged.values()), 3)
-    out["merge_min_of"] = [os.path.basename(path_a), os.path.basename(path_b)]
-    out.pop("gate", None)  # stale vs the merged numbers; re-run the gate
-    with open(out_path, "w") as f:
-        json.dump(out, f)
-    n_min_b = sum(1 for q in set(qa) & set(qb) if qb[q] < qa[q])
-    print(
-        f"merged {len(merged)} queries -> {out_path}  "
-        f"total {out['value']}s  (capture B was the min on "
-        f"{n_min_b}/{len(set(qa) & set(qb))} common rows)"
-    )
-    return 0
 
 
 def main(argv: list[str]) -> int:
-    if len(argv) < 2:
+    if len(argv) != 2:
         print(__doc__)
         return 2
-    if argv[0] == "--merge-min":
-        if len(argv) != 4:
-            print("usage: benchdiff.py --merge-min A.json B.json OUT.json")
-            return 2
-        return merge_min(argv[1], argv[2], argv[3])
-    pins_path = os.path.join(_HERE, "BENCH_PINS.json")
-    if "--pins" in argv:
-        i = argv.index("--pins")
-        pins_path = argv[i + 1]
-        argv = argv[:i] + argv[i + 2:]
-    update_gate = "--update-gate" in argv
-    if update_gate:
-        argv.remove("--update-gate")
-    allow_drift_flag = "--allow-drift" in argv
-    if allow_drift_flag:
-        argv.remove("--allow-drift")
-    old_doc, new_doc = _load_doc(argv[0]), _load_doc(argv[1])
-    old, new = _load_queries(argv[0]), _load_queries(argv[1])
-    with open(pins_path) as f:
-        pins_doc = json.load(f)
-    # Box-drift normalization only applies when the captures share
-    # engine source (ADVICE r10 #1): same source_sha stamp, or an
-    # explicit --allow-drift override for pre-stamp captures where the
-    # operator has verified zero code delta out of band.
-    sha_old, sha_new = old_doc.get("source_sha"), new_doc.get("source_sha")
-    allow_drift = allow_drift_flag or (
-        sha_old is not None and sha_old == sha_new
-    )
-    print(
-        f"drift normalization: {'ON' if allow_drift else 'OFF'} "
-        f"(source_sha old={sha_old or 'unstamped'} "
-        f"new={sha_new or 'unstamped'}"
-        + (", --allow-drift" if allow_drift_flag else "")
-        + ")"
-    )
-    movers = classify(old, new, pins_doc, allow_drift=allow_drift)
-    common = set(old) & set(new)
-    so, sn = sum(old[q] for q in common), sum(new[q] for q in common)
-    print(
-        f"common queries: {len(common)}  old {so:.1f}s  new {sn:.1f}s  "
-        f"ratio {sn / so:.2f}x"
-    )
-    unexplained = 0
-    for m in movers:
-        flag = "!!" if m["class"] == "UNEXPLAINED" else "ok"
-        unexplained += m["class"] == "UNEXPLAINED"
-        print(
-            f"{flag} {m['query']:35s} {m['old_sec']:7.2f} -> "
-            f"{m['new_sec']:7.2f}  ({m['ratio']}x)  [{m['class']}]"
-        )
-        print(f"     {m['why']}")
-    if not movers:
-        print(f"no movers > {pins_doc.get('ratio_threshold', 1.3)}x")
-    print(f"\n{len(movers)} movers, {unexplained} UNEXPLAINED")
-    if update_gate:
-        with open(argv[1]) as f:
-            doc = json.load(f)
-        doc["gate"] = {
-            "base": os.path.basename(argv[0]),
-            "common_ratio": round(sn / so, 3) if so else None,
-            "movers": len(movers),
-            "unexplained": unexplained,
-            "unexplained_queries": sorted(
-                m["query"] for m in movers if m["class"] == "UNEXPLAINED"
-            ),
-        }
-        with open(argv[1], "w") as f:
-            json.dump(doc, f)
-        print(f"gate field rewritten in {argv[1]}")
-    return 1 if unexplained else 0
+    docs = []
+    for path in argv:
+        with open(path) as f:
+            docs.append(json.load(f))
+    return report(*docs)[0]
 
 
 if __name__ == "__main__":

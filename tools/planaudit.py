@@ -17,6 +17,20 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from swat_mapreduce_spark.sources.manifest_source import (  # noqa: E402
+    JsonlSinkDataSource,
+    ManifestDataSource,
+)
+
+# A scan or write of one of the package's own Python data sources runs
+# in a Python worker, though its node ("BatchScan swat_manifest") names
+# no Python.
+_PY_SOURCE_NODE = re.compile(
+    r"\(\d+\)\s+[A-Za-z]+ (?:%s)\b"
+    % "|".join(d.name() for d in (ManifestDataSource, JsonlSinkDataSource))
+)
+
+
 def audit_one(plan: str) -> dict:
     """Counts of scale-relevant node kinds in the FINAL (adaptive)
     plan section. The formatted explain of an unexecuted AQE plan
@@ -45,7 +59,8 @@ def audit_one(plan: str) -> dict:
         "smj": nodes.count("SortMergeJoin"),
         # every Python-worker node names itself: ArrowEvalPython,
         # MapInArrow, FlatMapCoGroupsInPandas, ArrowAggregatePython, ...
-        "python": sum(1 for n in nodes if re.search("Python|Pandas|Arrow", n)),
+        "python": sum(1 for n in nodes if re.search("Python|Pandas|Arrow", n))
+        + len(_PY_SOURCE_NODE.findall(plan)),
         "scans": nodes.count("Scan"),
         "sorts": nodes.count("Sort"),
         # registry-wide no-cartesian contract: pinned at zero by
@@ -431,10 +446,10 @@ def main() -> None:
         "`shuffles` = hash/range Exchanges (each is a full network",
         "repartition of its input at 100 TB), `broadcasts` = small-side",
         "broadcast exchanges, `python` = Python-worker nodes (any node",
-        "named *Python*/*Pandas*/*Arrow*: the deliberate Python surfaces",
-        "only; a Python data source scan is a plain `BatchScan` and is",
-        "not counted), `pushed_filters` = parquet scans with at least",
-        "one pushed predicate.",
+        "named *Python*/*Pandas*/*Arrow*, plus each scan or write of the",
+        "package's own Python data sources, e.g. `BatchScan swat_manifest`:",
+        "the deliberate Python surfaces only), `pushed_filters` = parquet",
+        "scans with at least one pushed predicate.",
         "",
         "Streaming queries are omitted (they execute on construction;",
         "their aggregation plans mirror the batch twins).",
