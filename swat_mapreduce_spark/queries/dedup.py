@@ -466,7 +466,9 @@ def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = D.jaccard_verify_arrays(pairs, docsh, threshold=0.0).select(
         "doc_a", "doc_b", F.col("jaccard").alias("exact_jaccard")
     )
-    joined = est.join(exact, ["doc_a", "doc_b"])
+    # a shuffled hash join by hint: left to AQE, whichever side finished
+    # first was broadcast, and the plan varied by run
+    joined = est.join(exact.hint("shuffle_hash"), ["doc_a", "doc_b"])
     return joined.select(
         "doc_a",
         "doc_b",

@@ -1167,8 +1167,11 @@ def zone_map_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("month", "cnt")
         .agg(F.coalesce(F.sum("cnt2"), F.lit(0)).alias("lo"))
     )
+    # The months side is broadcast by hint: left to AQE, the build side
+    # is whichever input finishes first, and the plan (12 or 13 stages)
+    # varied from run to run.
     nat = (
-        cum.select("month")
+        F.broadcast(cum.select("month"))
         .join(
             blocks,
             (F.col("month") >= F.col("mn")) & (F.col("month") <= F.col("mx")),

@@ -489,8 +489,10 @@ def neardup_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_t = sh.select(F.count_distinct("doc_id").alias("n"))
     df_t = tf_t.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    # a shuffled hash join by hint: left to AQE, whichever of tf_t and
+    # df_t finished first was broadcast, and the plan varied by run
     w_t = (
-        tf_t.join(df_t, "shingle")
+        tf_t.join(df_t.hint("shuffle_hash"), "shingle")
         .filter(F.col("df") <= D.MAX_DF)
         .crossJoin(F.broadcast(n_t))
         .select(

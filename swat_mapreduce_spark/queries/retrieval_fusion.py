@@ -809,9 +809,12 @@ def ann_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("qid").alias("iqid"), F.col("vec_id").alias("ivid")
         )
     )
+    # iv (<= _IVFR_Q x _IVFR_K rows) broadcast by hint: left to AQE, bf
+    # was shuffled or not by whether the switch to a broadcast came
+    # before its stage started, and the plan varied by run
     rec = (
         bf.join(
-            iv,
+            F.broadcast(iv),
             (F.col("qid") == F.col("iqid"))
             & (F.col("vec_id") == F.col("ivid")),
             "left",

@@ -213,7 +213,9 @@ def quade_test_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("q"),
     )
-    sij = rk.join(q, "day").select(
+    # q broadcast by hint: left to AQE, whichever side finished first
+    # was broadcast, and the plan varied by run
+    sij = rk.join(F.broadcast(q), "day").select(
         "event_type", (F.col("q") * (F.col("r") - 3)).alias("s")
     )
     a = sij.agg(

@@ -17,6 +17,7 @@ WORK = {
     "shuffle_write_bytes": 50_000,
     "spill_bytes": 0,
     "cpu_s": 1.2,
+    "run_s": 2.0,
 }
 
 
@@ -61,11 +62,30 @@ def test_cpu_rule_ignores_sub_second_base():
     assert _regressions({"cpu_s": 0.9}, {**WORK, "cpu_s": 0.3}) == set()
 
 
+def test_cpu_move_over_half_second_base_is_regression():
+    """The floor is on the move: a 0.5 s query that takes 2.5 s of CPU
+    (a per-row blow-up on a small query) is caught."""
+    assert _regressions({"cpu_s": 2.5}, {**WORK, "cpu_s": 0.5}) == {"cpu_s"}
+
+
+def test_tiny_base_needs_a_one_second_move():
+    assert _regressions({"cpu_s": 0.9}, {**WORK, "cpu_s": 0.01}) == set()
+    assert _regressions({"cpu_s": 1.1}, {**WORK, "cpu_s": 0.05}) == {"cpu_s"}
+
+
+def test_slower_python_worker_shows_in_run_s():
+    """Time a task waits on its Python worker is run time, not JVM CPU."""
+    assert _regressions({"run_s": 5.0}) == {"run_s"}
+    assert _regressions({"run_s": 3.5}) == set()
+
+
 def test_non_movers_not_reported():
     """Wall time is reported, never judged; changes inside the byte and
     CPU bounds are neither regressions nor improvements."""
     old = _capture({"q": WORK})
-    new = _capture({"q": {**WORK, "input_bytes": 10_050, "cpu_s": 2.3}}, wall=3.0)
+    new = _capture(
+        {"q": {**WORK, "input_bytes": 10_050, "cpu_s": 2.3, "run_s": 3.9}}, wall=3.0
+    )
     g = gate(old, new)
     assert g["regressions"] == g["improvements"] == []
     assert g["common_ratio"] == 3.0
@@ -80,11 +100,11 @@ def test_uniform_hot_capture_passes(tmp_path):
 
 
 def test_decreases_never_fail_and_are_listed():
-    less = {**WORK, "stages": 3, "shuffle_write_bytes": 10_000, "cpu_s": 0.5}
+    less = {**WORK, "stages": 3, "shuffle_write_bytes": 10_000, "run_s": 0.5}
     g = gate(_capture({"q": WORK}), _capture({"q": less}))
     assert g["regressions"] == []
     assert {r["metric"] for r in g["improvements"]} == {
-        "stages", "shuffle_write_bytes", "cpu_s"
+        "stages", "shuffle_write_bytes", "run_s"
     }
 
 
@@ -108,6 +128,12 @@ def test_capture_without_work_refused(tmp_path):
     wall_only = {k: v for k, v in old.items() if k != "work"}
     assert _exit_code(tmp_path, old, wall_only) == 2
     assert _exit_code(tmp_path, wall_only, old) == 2
+
+
+def test_capture_missing_a_metric_refused(tmp_path):
+    """A capture from before run_s was recorded cannot be gated."""
+    no_run = {k: v for k, v in WORK.items() if k != "run_s"}
+    assert _exit_code(tmp_path, _capture({"q": no_run}), _capture({"q": WORK})) == 2
 
 
 def _repo_base() -> dict:

@@ -2,7 +2,8 @@
 
 A capture (the ``BENCH_full.json`` that bench.py writes) records, per
 headline query, the work its noop run did: Spark jobs, stages and
-tasks, input / shuffle-write / spill bytes, and executor CPU seconds.
+tasks, input / shuffle-write / spill bytes, and executor CPU and run
+seconds.
 Counts and bytes follow from the plan and the data, so two captures of
 the same tree agree on them (bytes to a fraction of a percent); wall
 time does not, and is only reported (the common wall ratio). A query
@@ -11,14 +12,22 @@ regresses when, against the base capture:
 - its ``jobs``, ``stages`` or ``tasks`` grow at all;
 - its ``input_bytes``, ``shuffle_write_bytes`` or ``spill_bytes`` grow
   by more than ``BYTES_TOL``;
-- its ``cpu_s`` exceeds ``CPU_RATIO`` x a base of at least
-  ``CPU_FLOOR_S`` (a per-row expression blow-up leaves the plan
-  counts as they were).
+- its ``cpu_s`` or ``run_s`` grows past ``TIME_RATIO`` x the base by
+  at least ``TIME_MOVE_S`` (a per-row expression blow-up leaves the
+  plan counts as they were). The floor is on the move, not on the
+  base, so a 0.5 s query that turns 3 s is caught while a 0.01 s one
+  that turns 0.03 s is noise. ``cpu_s`` is the JVM task threads' CPU;
+  ``run_s``, the tasks' run time, also holds the time a task waits on
+  its Python worker, so a slower Python UDF shows there.
+
+Work done on the driver alone (a Python loop over collected rows,
+plan building) is in none of these metrics: the gate does not see it,
+and only the reported wall time does.
 
 The mirrored changes are listed as improvements. Queries present in
 only one capture are listed, not judged. Captures taken with different
-``cpus`` (task counts follow the cores) or ``sf``, or carrying no
-``work``, cannot be compared and are refused.
+``cpus`` (task counts follow the cores) or ``sf``, or whose ``work``
+lacks a metric, cannot be compared and are refused.
 
     python tools/benchdiff.py OLD.json NEW.json
 
@@ -33,8 +42,10 @@ import sys
 COUNTS = ("jobs", "stages", "tasks")
 BYTES = ("input_bytes", "shuffle_write_bytes", "spill_bytes")
 BYTES_TOL = 0.01
-CPU_RATIO = 2.0
-CPU_FLOOR_S = 1.0
+TIMES = ("cpu_s", "run_s")
+TIME_RATIO = 2.0
+TIME_MOVE_S = 1.0
+METRICS = COUNTS + BYTES + TIMES
 
 
 class Refused(Exception):
@@ -48,9 +59,10 @@ def _direction(metric: str, old: float, new: float) -> int:
         return (new > old) - (new < old)
     if metric in BYTES:
         return (new > old * (1 + BYTES_TOL)) - (old > new * (1 + BYTES_TOL))
-    if old < CPU_FLOOR_S:
+    lo, hi = sorted((old, new))
+    if hi <= TIME_RATIO * lo or hi - lo < TIME_MOVE_S:
         return 0
-    return (new > CPU_RATIO * old) - (old > CPU_RATIO * new)
+    return 1 if new > old else -1
 
 
 def gate(old: dict, new: dict) -> dict:
@@ -59,13 +71,16 @@ def gate(old: dict, new: dict) -> dict:
     for doc, side in ((old, "base"), (new, "new")):
         if not doc.get("work"):
             raise Refused(f"{side} capture records no per-query work")
+        missing = {m for w in doc["work"].values() for m in METRICS if m not in w}
+        if missing:
+            raise Refused(f"{side} capture records no {' '.join(sorted(missing))}")
     for key in ("cpus", "sf"):
         if old.get(key) != new.get(key):
             raise Refused(f"{key} differs: {old.get(key)} vs {new.get(key)}")
     ow, nw = old["work"], new["work"]
     out: dict = {"regressions": [], "improvements": []}
     for q in sorted(set(ow) & set(nw)):
-        for metric in COUNTS + BYTES + ("cpu_s",):
+        for metric in METRICS:
             a, b = ow[q][metric], nw[q][metric]
             d = _direction(metric, a, b)
             if d:
