@@ -463,11 +463,12 @@ def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             (est_sum / float(D.NUM_HASHES)).alias("est_jaccard"),
         )
     )
-    exact = D.jaccard_verify_arrays(pairs, docsh, threshold=0.0).select(
-        "doc_a", "doc_b", F.col("jaccard").alias("exact_jaccard")
-    )
-    # a shuffled hash join by hint: left to AQE, whichever side finished
-    # first was broadcast, and the plan varied by run
+    # shuffled hash joins by hint, here and below: left to AQE, the
+    # join broadcast whichever of its persisted inputs finished first,
+    # and the plan varied by run (CLAUDE.md gotcha 21)
+    exact = D.jaccard_verify_arrays(
+        pairs, docsh.hint("shuffle_hash"), threshold=0.0
+    ).select("doc_a", "doc_b", F.col("jaccard").alias("exact_jaccard"))
     joined = est.join(exact.hint("shuffle_hash"), ["doc_a", "doc_b"])
     return joined.select(
         "doc_a",

@@ -240,15 +240,18 @@ def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     try:
+        # drained = the batches' progress reports sum to every row: read
+        # on the driver, so waiting runs no Spark job of its own (a
+        # count() per poll made the job count follow the wall clock)
         deadline = time.time() + 120
         while time.time() < deadline:
-            if spark.table(qname).count() >= _PYSTREAM_ROWS:
+            got = sum(p["numInputRows"] for p in q.recentProgress)
+            if got >= _PYSTREAM_ROWS:
                 break
             time.sleep(0.2)
         else:
             # fail loudly: a partial drain would otherwise surface as an
             # opaque value-hash mismatch at the driver
-            got = spark.table(qname).count()
             raise TimeoutError(
                 f"python_datasource_stream drained {got}/{_PYSTREAM_ROWS} "
                 "rows before the 120 s deadline"

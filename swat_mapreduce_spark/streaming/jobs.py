@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor
 
@@ -422,14 +422,47 @@ def streaming_classify(
 ) -> DataFrame:
     """The reference pipeline as a stream: manifest files arriving in a
     directory are cleaned, scored, and labeled continuously — the
-    stateless per-row stages (trim/filter/score/softmax/label
-    broadcast-join) run unchanged in append mode, which is the whole
+    stateless per-row stages (trim/filter/score/softmax, and the label
+    lookup ``labels.class_name_at``, a literal-array index) run
+    unchanged in append mode, which is the whole
     point of keeping the pipeline declarative: batch and streaming
     share one dataflow definition (SURVEY.md §7 step 5)."""
     from swat_mapreduce_spark.operators import classify
 
     stream = spark.readStream.schema(schema).format("text").load(manifest_dir)
     return classify.predict(stream.withColumnRenamed("value", "line"), spark)
+
+
+def _clicks_purchases(
+    stream: DataFrame, horizon: str, click_delay: str, purchase_delay: str
+) -> tuple[DataFrame, DataFrame, Column]:
+    """The two sides of a click → purchase interval join, each under its
+    own watermark delay, and the join condition: same user, purchase
+    within [click_ts, click_ts + horizon]."""
+    clicks = (
+        stream.filter(F.col("event_type") == "click")
+        .select(
+            F.col("user_id").alias("c_user"),
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", click_delay)
+    )
+    purchases = (
+        stream.filter(F.col("event_type") == "purchase")
+        .select(
+            "user_id",
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", purchase_delay)
+    )
+    cond = (
+        (F.col("c_user") == F.col("user_id"))
+        & (F.col("purchase_ts") >= F.col("click_ts"))
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}"))
+    )
+    return clicks, purchases, cond
 
 
 def interval_join_clicks_purchases(
@@ -444,28 +477,8 @@ def interval_join_clicks_purchases(
     attribution join. (An unbounded-condition stream-stream join would
     hold every row forever.)
     """
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    cond = (
-        (F.col("c_user") == F.col("user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}"))
+    clicks, purchases, cond = _clicks_purchases(
+        stream, horizon, "1 hour", "2 hours"
     )
     return clicks.join(purchases, cond).select(
         "user_id",
@@ -621,31 +634,8 @@ def interval_join_left_outer(
     never advances past the real data, and the last clicks are
     silently never emitted. Filter the materialized result instead.
     """
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "10 minutes")
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "10 minutes")
-    )
-    cond = (
-        (F.col("c_user") == F.col("user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")
-        )
+    clicks, purchases, cond = _clicks_purchases(
+        stream, horizon, "10 minutes", "10 minutes"
     )
     return clicks.join(purchases, cond, "left_outer").select(
         F.col("c_user"),
@@ -671,31 +661,8 @@ def interval_join_full_outer(
     both scans and pins the watermark); filter the materialized
     result on ``coalesce(c_user, user_id) >= 0`` instead.
     """
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "10 minutes")
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "10 minutes")
-    )
-    cond = (
-        (F.col("c_user") == F.col("user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")
-        )
+    clicks, purchases, cond = _clicks_purchases(
+        stream, horizon, "10 minutes", "10 minutes"
     )
     return clicks.join(purchases, cond, "full_outer").select(
         "c_user",
@@ -724,31 +691,8 @@ def interval_join_right_outer(
     result on ``user_id >= 0`` (the purchase side is always present
     in right-outer output) instead.
     """
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "10 minutes")
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "10 minutes")
-    )
-    cond = (
-        (F.col("c_user") == F.col("user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")
-        )
+    clicks, purchases, cond = _clicks_purchases(
+        stream, horizon, "10 minutes", "10 minutes"
     )
     return clicks.join(purchases, cond, "right_outer").select(
         "user_id",

@@ -377,6 +377,20 @@ def test_plans_census_covers_full_registry(spark):
     assert not unknown, f"PLANS.md cites unregistered queries: {unknown}"
 
 
+def test_bench_base_covers_full_registry():
+    """bench records every registered query but its reasoned exclusions,
+    so the committed gate base holds one work record per such name: a
+    base covering a subset would leave the rest ungated without a word."""
+    import json
+
+    from bench import UNBENCHED
+    from swat_mapreduce_spark.queries import load_all
+
+    with open("BENCH_BASE.json") as f:
+        base = json.load(f)
+    assert sorted(base["work"]) == sorted(set(load_all()) - set(UNBENCHED))
+
+
 def test_census_reads_plan_fn_plans():
     """A query with a plan_fn collects inside its spark_fn, which plans
     as a bare LocalTableScan of the collected rows. Every such query is
@@ -402,10 +416,9 @@ def test_census_reads_plan_fn_plans():
 
 
 def test_census_has_no_cartesian_products():
-    """Registry-wide no-cartesian contract: the pytest guardrail walks
-    only the headline set; the census walks EVERY batch query, so its
-    cartesian column being all-zero extends the guarantee to the full
-    registry at zero pytest cost."""
+    """Registry-wide no-cartesian contract over the committed census:
+    PLANS.md (planned at sf0.01) must read 0 in its cartesian column
+    for every batch query, as test_plans checks live at sf0.001."""
     import re
 
     text = open("PLANS.md").read()

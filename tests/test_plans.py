@@ -217,55 +217,25 @@ def test_join_strategy_hints_honored(spark, sf_dir):
         assert node in formatted_plan(j), f"hint {hint} must plan {node}"
 
 
-def test_headline_plans_no_cartesian_bounded_python(spark, sf_dir):
-    """Registry-wide plan guardrails over the bench headline set:
-    (a) no CartesianProduct node anywhere — an accidental unkeyed join
-    is the classic 100 TB killer; (b) Python eval stages appear ONLY
-    in queries whose semantics are deliberately Python (inference,
-    multimodal, UDTF/UDAF surfaces) — everything else must stay
-    whole-stage-codegen JVM."""
-    import importlib.util
-    import os
+def test_registry_plans_no_cartesian_bounded_python(spark, sf_dir):
+    """Plan guardrails over every batch query, on the plan its "plan"
+    mode explains (a ``plan_fn`` query's real plan, not its collected
+    rows): (a) no CartesianProduct node — an accidental unkeyed join
+    is the classic 100 TB killer; (b) Python-worker stages only in the
+    deliberate Python surfaces of ``_PYTHON_STAGE_ALLOWLIST``. Nodes
+    are counted by the census's own rule (``planaudit.audit_one``)."""
+    from swat_mapreduce_spark.queries import load_all, run_query
+    from tests.test_parity_utils import _PYTHON_STAGE_ALLOWLIST
+    from tools.planaudit import audit_one
 
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
-    from swat_mapreduce_spark.plans.explain import formatted_plan
-    from swat_mapreduce_spark.queries import load_all
-
-    deliberate_python = {
-        "infer_mapinpandas",
-        "multimodal_frame_sample",
-        "binary_inference_e2e",
-        # r3 Python-surface queries: the Python stage IS the feature
-        "udtf_dynamic_schema",
-        "udtf_table_argument",
-        "arrow_scalar_udf",
-        "arrow_udtf_batch_filter",
-    }
-    reg = load_all()
     offenders, cartesians = [], []
-    for name in bench.HEADLINE:
+    for name, q in sorted(load_all().items()):
         if name.startswith("stream_"):
             continue  # execute on construction; covered by batch twins
-        df = reg[name].spark_fn(spark, sf_dir)
-        plan = formatted_plan(df).split("== Initial Plan ==")[0]
-        if "CartesianProduct" in plan:
+        counts = audit_one(run_query(spark, q, sf_dir, "plan"))
+        if counts["cartesian"]:
             cartesians.append(name)
-        has_python = any(
-            n in plan
-            for n in (
-                "ArrowEvalPython",
-                "BatchEvalPython",
-                "MapInPandas",
-                "FlatMapGroupsInPandas",
-                "PythonMapInArrow",
-            )
-        )
-        if has_python and name not in deliberate_python:
+        if counts["python"] and name not in _PYTHON_STAGE_ALLOWLIST:
             offenders.append(name)
     assert not cartesians, f"cartesian products in: {cartesians}"
     assert not offenders, f"unexpected Python stages in: {offenders}"

@@ -97,6 +97,8 @@ def test_work_counts_repeat_exactly(spark, sf_dir):
         "neardup_tfidf_cosine",
         "quade_test_event_types",
         "ann_ivf_recall_eval",
+        "minhash_estimate_accuracy",
+        "python_datasource_stream",
     ):
         runs = [time_query(spark, reg[name], sf_dir)[1] for _ in range(4)]
         counts = [{k: w[k] for k in ("jobs", "stages", "tasks")} for w in runs]
