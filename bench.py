@@ -1,5 +1,5 @@
 """Benchmark harness: runs every registered query (``load_all()``, in
-name order, less the reasoned ``UNBENCHED`` exclusions) at
+name order) at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
@@ -36,13 +36,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from py4j.protocol import Py4JJavaError  # noqa: E402
 
 from perfbench.tracing import SparkStatus  # noqa: E402
-
-# registered queries bench leaves out, each with its reason
-UNBENCHED = {
-    "bfs_2hop_reach": "its jobs/stages/tasks vary from run to run of one "
-    "tree (35-37 jobs at sf0.1, 4 cores), so the work gate would fail an "
-    "unchanged tree; cause not pinned (CHANGES.md FOUND)",
-}
 
 REPEATS = 2
 # a stream_* rep this slow is not repeated: it bounds run time, and a
@@ -130,11 +123,15 @@ def time_query(spark, q, sf_dir: str) -> tuple[list[float], dict]:
     the work they did. Each run is job group ``<query>#<rep>``; its
     work, every job it submitted, is read from Spark's status store
     after its timed window. Jobs, stages, tasks and bytes are rep 1's,
-    which always runs; ``cpu_s`` and ``run_s`` are the least of any
-    rep, like wall."""
+    which always runs and builds every staged fixture the query uses
+    (``sources/staging``, cleared first, so the count does not depend
+    on which query ran before); ``cpu_s`` and ``run_s`` are the least
+    of any rep, like wall."""
     from swat_mapreduce_spark.queries import run_query
+    from swat_mapreduce_spark.sources.staging import clear_staged
     from tools.benchdiff import BYTES, COUNTS, TIMES
 
+    clear_staged()
     status = _Status(spark)
     times: list[float] = []
     totals: list[dict] = []
@@ -161,7 +158,7 @@ def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
     reg = load_all()
-    names = sorted(set(reg) - set(UNBENCHED))
+    names = sorted(reg)
 
     warm_up(spark, reg, sf_dir)
 

@@ -9,6 +9,7 @@ from swat_mapreduce_spark.functions import rounding as R
 from swat_mapreduce_spark.operators import dedup as D
 from swat_mapreduce_spark.queries import register
 from swat_mapreduce_spark.sources.readers import read_table
+from swat_mapreduce_spark.sources.staging import staged_dir
 
 # Shared DuckDB CTE: distinct 3-word shingles per doc (matches
 # functions/text.py word_shingles + array_distinct).
@@ -722,7 +723,6 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the pre-registered views — CLAUDE.md gotcha 9a); they recompute the
 # same signatures from the documents view, which checks exactly the
 # CONTENT the index must contain.
-_LSH_INDEX_CACHE: dict[str, str] = {}
 
 
 def _sigs_sql(where: str) -> str:
@@ -750,35 +750,28 @@ def _bands_sql(sigs_cte: str) -> str:
 def _lsh_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the corpus LSH index parquet exists for ``sf_dir``;
     build it on first call (one corpus pass: shingle → signatures →
-    bands), reuse it afterwards — the probe query's 'corpus touched
-    zero times' contract. Two artifacts: ``sigs`` (doc_id, h0..h15)
-    and ``bands`` (doc_id, band, bucket)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
+    bands), reuse it afterwards (a staged fixture, ``sources/staging``)
+    — the probe query's 'corpus touched zero times' contract. Two
+    artifacts: ``sigs`` (doc_id, h0..h15) and ``bands`` (doc_id, band,
+    bucket)."""
 
-    cached = _LSH_INDEX_CACHE.get(sf_dir)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    root = tempfile.mkdtemp(prefix="swat_lsh_index_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    docs = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 10 < 8
-    )
-    # nonempty=True, not .filter(size(sh_arr) >= 1): the derived-column
-    # filter pushes into the scan with the shingle pipeline re-inlined
-    # (gotcha 13, r13); size(toks) >= 3 is the cheap equivalent
-    docsh = D.doc_shingle_arrays(docs, 3, nonempty=True)
-    sigs = D.minhash_signatures_from_arrays(docsh)
-    # repartition(4), never coalesce(1) (CLAUDE.md gotcha 11); a real
-    # deployment would bucketBy (band, bucket) here — the tmp-dir
-    # index keeps plain parquet so the probe join stays readable
-    sigs.repartition(4).write.parquet(root + "/sigs")
-    bands = D.lsh_bands(spark.read.parquet(root + "/sigs"))
-    bands.repartition(4).write.parquet(root + "/bands")
-    _LSH_INDEX_CACHE[sf_dir] = root
-    return root
+    def build(root: str) -> None:
+        docs = read_table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") % 10 < 8
+        )
+        # nonempty=True, not .filter(size(sh_arr) >= 1): the derived-column
+        # filter pushes into the scan with the shingle pipeline re-inlined
+        # (gotcha 13, r13); size(toks) >= 3 is the cheap equivalent
+        docsh = D.doc_shingle_arrays(docs, 3, nonempty=True)
+        sigs = D.minhash_signatures_from_arrays(docsh)
+        # repartition(4), never coalesce(1) (CLAUDE.md gotcha 11); a real
+        # deployment would bucketBy (band, bucket) here — the tmp-dir
+        # index keeps plain parquet so the probe join stays readable
+        sigs.repartition(4).write.parquet(root + "/sigs")
+        bands = D.lsh_bands(spark.read.parquet(root + "/sigs"))
+        bands.repartition(4).write.parquet(root + "/bands")
+
+    return staged_dir("lsh_index", sf_dir, build)
 
 
 def _index_build_oracle() -> str:

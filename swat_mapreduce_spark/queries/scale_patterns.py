@@ -928,6 +928,9 @@ def bfs_2hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .persist()  # referenced by both hops + seed derivation
     )
+    # build the cache in a job of its own: left to the stages that read
+    # it, the query ran 35 to 38 jobs from run to run (sf0.1, 4 cores)
+    edges.count()
     seeds = edges.filter(F.col("c") % _BFS_SEED_MOD == 0).select(
         "c"
     ).distinct()

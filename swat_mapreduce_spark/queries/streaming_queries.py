@@ -825,16 +825,8 @@ def _stream_probe_oracle() -> str:
     return _probe_oracle()
 
 
-_PROBE_STAGE_CACHE: dict[str, str] = {}
-
-
 @register("stream_probe_dedup_index", oracle=_stream_probe_oracle())
 def stream_probe_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from swat_mapreduce_spark.queries.dedup import (
@@ -842,6 +834,7 @@ def stream_probe_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_docs_against_index,
     )
     from swat_mapreduce_spark.sources.readers import read_table
+    from swat_mapreduce_spark.sources.staging import staged_dir
 
     root = _lsh_index_dir(spark, sf_dir)
     batch_docs = read_table(spark, sf_dir, "documents").filter(
@@ -853,16 +846,15 @@ def stream_probe_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coalesce(2): the documents scan is a single partition, so a
     # coalesce(2) is a silent no-op that staged ONE file — r6's replay
     # was a one-batch run (found r7; coalesce caps, never raises).
-    # The staged dir is process-cached per sf_dir (the sentinel-stage
-    # pattern): the fixture is deterministic read-only parquet, so
-    # re-staging identical files per call bought nothing; each call
-    # still replays with a fresh stream + fresh per-batch probes.
-    stage = _PROBE_STAGE_CACHE.get(sf_dir)
-    if stage is None or not os.path.isdir(stage):
-        stage = tempfile.mkdtemp(prefix="swat_probe_stream_")
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
-        batch_docs.repartition(2).write.parquet(stage + "/in")
-        _PROBE_STAGE_CACHE[sf_dir] = stage
+    # The staged dir is a process-cached fixture (sources/staging):
+    # deterministic read-only parquet, so re-staging identical files
+    # per call bought nothing; each call still replays with a fresh
+    # stream + fresh per-batch probes.
+    stage = staged_dir(
+        "probe_stream",
+        sf_dir,
+        lambda r: batch_docs.repartition(2).write.parquet(r + "/in"),
+    )
     schema = batch_docs.schema
     stream = (
         spark.readStream.schema(schema)

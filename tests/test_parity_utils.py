@@ -378,17 +378,16 @@ def test_plans_census_covers_full_registry(spark):
 
 
 def test_bench_base_covers_full_registry():
-    """bench records every registered query but its reasoned exclusions,
-    so the committed gate base holds one work record per such name: a
-    base covering a subset would leave the rest ungated without a word."""
+    """bench records every registered query, so the committed gate base
+    holds one work record per registered name: a base covering a subset
+    would leave the rest ungated without a word."""
     import json
 
-    from bench import UNBENCHED
     from swat_mapreduce_spark.queries import load_all
 
     with open("BENCH_BASE.json") as f:
         base = json.load(f)
-    assert sorted(base["work"]) == sorted(set(load_all()) - set(UNBENCHED))
+    assert sorted(base["work"]) == sorted(load_all())
 
 
 def test_census_reads_plan_fn_plans():
