@@ -29,8 +29,18 @@ launch 1.7-2.4 s, ``JavaSparkContext`` 1.25-1.5 s, the JVM
 ``SparkSession`` 2.1-2.2 s and ``_cap_file_splits`` 0.4 s, 6.3-6.5 s in
 all. A new driver JVM therefore starts from a class-data-sharing
 archive of those classes (``_class_archive``, CLAUDE.md gotcha 20):
-0.9 s, 0.6 s, 0.9-1.0 s and 0.1 s, 2.8-3.0 s in all. The first session
-records the archive and is slower (~10 s, plus ~10 s at process exit).
+0.9-1.6 s, 0.5-0.65 s, 0.8-1.0 s and 0.1 s, plus 0.3 s in pyspark's
+first Py4J call with an argument (it imports pandas), 2.8-3.7 s in all
+(4 sessions). The first session records the archive and is slower
+(~10 s, plus ~10 s at process exit).
+
+Two of those costs are not class loading. The JVM ``SparkSession``
+step was mostly spark-mllib's classpath session extension setting up
+Scala's runtime reflection (``_LOAD_EXTENSIONS_FROM_CP``), and the
+pandas import ran while the JVM sat idle (``_CONVERTER_DEPS``).
+``get_spark`` skips the one and overlaps the other with the gateway
+launch: 0.9-1.05 s, 0.6-0.7 s, 0.06-0.1 s and 0.13-0.21 s, 1.85-2.1 s
+in all (4 sessions alternating with the 4 above).
 """
 
 from __future__ import annotations
@@ -39,10 +49,13 @@ import atexit
 import contextlib
 import glob
 import hashlib
+import importlib
 import os
 import re
 import shutil
 import subprocess
+import sys
+import threading
 from typing import NamedTuple
 
 from pyspark import SparkContext
@@ -54,6 +67,18 @@ from pyspark.sql import SparkSession
 # directory goes on the workers' path so any driver cwd finds it.
 _DAEMON_MODULE = "site_pyspark_daemon"
 _DAEMON_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Static conf (StaticSQLConf.LOAD_SESSION_EXTENSIONS_FROM_CLASSPATH). The
+# one session extension on Spark's classpath is spark-mllib's
+# InternalFunctionRegistration: it registers vector_to_array,
+# array_to_vector and aggregate_metrics for Spark Connect only, and
+# building them sets up Scala's runtime reflection, about 1 s of every
+# session's set-up. Extensions named in spark.sql.extensions still load.
+_LOAD_EXTENSIONS_FROM_CP = "spark.sql.extensions.test.loadFromCp"
+# pyspark's first Py4J call with an argument runs
+# NumpyArrayConverter.can_convert, which imports this module and with it
+# pandas (0.3-0.35 s on 4 vCPU).
+_CONVERTER_DEPS = "pyspark.testing.utils"
 
 # Tuned for local[$SPARK_GRAFT_CPUS] testing; on a real cluster the same
 # settings hold except shuffle partitions, which should track cluster
@@ -115,7 +140,9 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
     when no cluster master is configured. A new driver JVM starts from
     the class-data-sharing archive when its classpath allows one
-    (``_class_archive``).
+    (``_class_archive``). Session extensions found on the classpath are
+    not loaded unless ``extra_conf`` sets
+    ``spark.sql.extensions.test.loadFromCp``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None and "MASTER" not in os.environ:
@@ -131,6 +158,14 @@ def get_spark(
         conf.update(extra_conf)
     conf["spark.python.daemon.module"] = _DAEMON_MODULE
     conf[_PY_PATH] = _join(conf.get(_PY_PATH), _DAEMON_DIR, os.pathsep)
+    conf.setdefault(_LOAD_EXTENSIONS_FROM_CP, "false")
+    if SparkContext._gateway is None and _CONVERTER_DEPS not in sys.modules:
+        # import it while the new driver JVM boots; whichever thread gets
+        # there second waits on the module's import lock
+        threading.Thread(
+            target=importlib.import_module, args=(_CONVERTER_DEPS,),
+            name="preload-" + _CONVERTER_DEPS, daemon=True,
+        ).start()
     archive = _class_archive(conf)
     if archive is not None:
         conf_dir, flag, recording = archive
@@ -179,8 +214,9 @@ def _join(old: str | None, new: str, sep: str = " ") -> str:
 def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine defaults to an externally-created
     session (the correctness driver hands us its own SparkSession).
-    Static confs such as the Python daemon module cannot be set here, so
-    such a session keeps stock Python workers."""
+    Static confs such as the Python daemon module and the skip of
+    classpath session extensions cannot be set here, so such a session
+    keeps stock Python workers and spark-mllib's extension."""
     for k, v in _DEFAULTS.items():
         try:
             spark.conf.set(k, v)
@@ -195,8 +231,8 @@ def _cap_file_splits(spark: SparkSession) -> SparkSession:
     ``defaultParallelism`` splits; smaller scans keep their layout.
     1,000 objects of 4-32 KiB on 4 cores: 32 -> 4 payload-scorer tasks
     (CLAUDE.md gotcha 16). Setting a conf builds the session's SQL state
-    here rather than at the first query (~0.4 s on 4 cores, moved into
-    session start, not added)."""
+    here rather than at the first query (0.13-0.21 s on 4 cores, moved
+    into session start, not added)."""
     spark.conf.set(
         "spark.sql.files.maxPartitionNum",
         str(spark.sparkContext.defaultParallelism),

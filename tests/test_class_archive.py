@@ -158,14 +158,17 @@ _SESSION = textwrap.dedent("""
     }}))
 """)
 
-# SparkContext itself exports these two for its serializers.
+# SparkContext itself exports these two for its serializers. They are kept
+# out of the child's env too: this pytest process has them once an
+# earlier test started a session.
 _PYSPARK_ENV = ("SPARK_AUTH_SOCKET_TIMEOUT", "SPARK_BUFFER_SIZE")
 
 
 def _run_session(tmp_path) -> dict:
     script = tmp_path / "probe.py"
     script.write_text(_SESSION.format(repo=REPO))
-    env = {k: v for k, v in os.environ.items() if k not in ("SPARK_CONF_DIR", *CLASSPATH_ENV)}
+    dropped = ("SPARK_CONF_DIR", *CLASSPATH_ENV, *_PYSPARK_ENV)
+    env = {k: v for k, v in os.environ.items() if k not in dropped}
     env["XDG_CACHE_HOME"] = str(tmp_path / "cache")
     out = subprocess.run(
         [sys.executable, str(script)], cwd=tmp_path, env=env,
